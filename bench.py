@@ -327,10 +327,12 @@ def plan_fingerprint2(df) -> str:
     x_15``) that the r8 normalization cannot see — it lives BEFORE
     the ``#id`` suffix — so any HOF query's fp depends on how many
     expressions the session allocated earlier (query order, reps,
-    warmups).  Normalizing ``name_N#x`` → ``name_n#x`` makes the
-    fingerprint a pure function of the plan (verified stable across
-    fresh/burned sessions); kept as a SECOND field so every committed
-    PLAN_FP_r{N} map stays diffable under the original rule."""
+    warmups).  Normalizing ``lambda name_N#x`` → ``lambda name_n#x``
+    makes the fingerprint a pure function of the plan (verified stable
+    across fresh/burned sessions); only lambda binders are stripped, so
+    plain columns such as ``a_1`` and ``a_2`` stay distinct.  Kept as a
+    SECOND field so every committed PLAN_FP_r{N} map stays diffable
+    under the original rule."""
     s = df._jdf.queryExecution().executedPlan().toString()
     s = re.sub(r"#\d+[A-Z]*", "#x", s)
     s = re.sub(r"\[id=#?\d+\]", "[id=x]", s)
@@ -338,7 +340,7 @@ def plan_fingerprint2(df) -> str:
     s = re.sub(r"(file|s3a?|hdfs):[^\s,\]\)]+", "path", s)
     s = re.sub(r"\d+(\.\d+)?\s*(B|KiB|MiB|GiB|TiB)\b", "sz", s)
     s = re.sub(r"\b\d+ paths?\b", "n paths", s)
-    s = re.sub(r"\b([A-Za-z]+)_\d+#x", r"\1_n#x", s)  # lambda counters
+    s = re.sub(r"\blambda ([A-Za-z]+)_\d+#x", r"lambda \1_n#x", s)  # lambda counters
     s = re.sub(r"\s+", " ", s).strip()
     return hashlib.md5(s.encode()).hexdigest()[:12]
 

@@ -21,9 +21,8 @@ from __future__ import annotations
 import io
 import json
 import os
-import zipfile
-
 import tempfile
+import zipfile
 
 from netcdf_olap_spark.operators.spatial import parse_geojson_polygon
 from netcdf_olap_spark.plans import CubeQuery
@@ -66,36 +65,28 @@ def _zip_manifest(manifest_rows) -> bytes:
     return buf.getvalue()
 
 
-def result_zip(spark, q: CubeQuery) -> bytes:
-    """Run the query and pack one PNG per variable into a zip
-    (main.py:113-126). Images are written by the rendering TASKS
-    (Gddp.scala:235-236's contract — the task writes the artifact, not
-    the driver); the driver only collects (path, size, checksum)
-    manifest rows and zips the finished files."""
-    with tempfile.TemporaryDirectory(prefix="nolap_api_png_") as td:
-        manifest = render_png_files(
-            q.apply(load_grid(spark, register=False)), td, q.start_date, q.end_date
-        )
-        return _zip_manifest(manifest.collect())
+def result_zip(spark, q: CubeQuery, fmt: str = "png") -> bytes:
+    """Run the query and zip its artifacts (main.py:113-126).
 
+    ``fmt``: ``png`` renders one image per variable; ``nc`` / ``nc4``
+    export the sliced cube itself as one classic CDF-1 / NetCDF-4 file
+    per variable — the engine form of the reference's raw-values
+    ``result.txt`` alternative (geopy.py:101-102; main.py:129 comment).
+    Artifacts are written by their TASKS (Gddp.scala:235-236's
+    contract — the task writes the artifact, not the driver); the
+    driver only collects (path, size, checksum) manifest rows and zips
+    the finished files."""
+    with tempfile.TemporaryDirectory(prefix="nolap_api_") as td:
+        sliced = q.apply(load_grid(spark, register=False))
+        if fmt == "png":
+            manifest = render_png_files(sliced, td, q.start_date, q.end_date)
+        else:
+            # resolved per call, so a wrapper set on the sink module
+            # (perfbench's traced run) is seen
+            from netcdf_olap_spark.sinks.netcdf import export_netcdf_files
 
-def result_nc_zip(spark, q: CubeQuery, fmt: str = "hdf5") -> bytes:
-    """The .nc-export counterpart of ``result_zip``: the same sliced
-    cube leaves as one NetCDF file per variable (classic CDF-1 or
-    NetCDF-4/HDF5 via sinks/netcdf.py) — the engine generalization of
-    the reference's raw-values ``result.txt`` alternative
-    (geopy.py:101-102; main.py:129 comment). Files are written
-    executor-side (export_netcdf_files); only manifest rows reach the
-    driver."""
-    from netcdf_olap_spark.sinks.netcdf import export_netcdf_files
-
-    with tempfile.TemporaryDirectory(prefix="nolap_api_nc_") as td:
-        manifest = export_netcdf_files(
-            q.apply(load_grid(spark, register=False)),
-            td,
-            fmt=fmt,
-            gzip=6 if fmt == "hdf5" else None,
-        )
+            nc_fmt, gzip = ("classic", None) if fmt == "nc" else ("hdf5", 6)
+            manifest = export_netcdf_files(sliced, td, fmt=nc_fmt, gzip=gzip)
         return _zip_manifest(manifest.collect())
 
 
@@ -163,10 +154,11 @@ def create_app(spark=None):
                 raise ValueError(f"format must be png, nc, or nc4, got {fmt!r}")
         except (ValueError, KeyError, TypeError) as ex:
             return jsonify({"message": f"bad request: {ex}"}), 400
-        if fmt == "png":
-            data = result_zip(spark, q)
-        else:  # the sliced cube itself, as the reference's own input format
-            data = result_nc_zip(spark, q, fmt="classic" if fmt == "nc" else "hdf5")
+        try:
+            data = result_zip(spark, q, fmt)
+        except Exception as ex:  # engine failure: JSON, not Flask's HTML 500 page
+            app.logger.exception("fetchResult failed")
+            return jsonify({"message": f"engine error: {ex}", "error": type(ex).__name__}), 500
         return send_file(
             io.BytesIO(data),
             mimetype="application/zip",

@@ -41,28 +41,6 @@ from pyspark.sql import functions as F
 Codebooks = list[list[np.ndarray]]  # [subspace][code] -> subdim vector
 
 
-def _sub(vec_col: Column, s: int, subdim: int) -> Column:
-    """Subvector s (1-based slice; plan-constant bounds)."""
-    return F.slice(vec_col, s * subdim + 1, subdim)
-
-
-def _assign_code(sub_col: Column, codebook: list[np.ndarray]) -> Column:
-    """Per-subspace code: argmin over the codebook, with the codebook
-    as ONE nested literal array iterated by a single transform lambda
-    — not k unrolled per-entry aggregates (similarity.ivf_assign_col's
-    rationale). Used by callers that already hold the subvector."""
-    carr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in codebook])
-    dists = F.transform(
-        carr,
-        lambda c: F.aggregate(
-            F.zip_with(sub_col, c, lambda x, y: x.cast("double") - y),
-            F.lit(0.0),
-            lambda acc, v: acc + v * v,
-        ),
-    )
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def pq_codes_col(vec_col: Column, codebooks: Codebooks) -> Column:
     """array<int> of m codes — the encoded vector, as one native
     expression (plan-constant codebooks → pure map).

@@ -31,10 +31,6 @@ def tokens(col: Column | str = "text") -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != F.lit(""))
 
 
-def token_count(col: Column | str = "text") -> Column:
-    return F.size(tokens(col))
-
-
 def shingles_from_tokens(t: Column, n: int = 3) -> Column:
     """Word n-gram shingles from an already-materialized token array
     column: shingle i = t[i..i+n-1] joined by spaces. ``t`` MUST be a

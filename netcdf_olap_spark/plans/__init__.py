@@ -62,9 +62,9 @@ class CubeQuery:
     def render(self, grid: DataFrame, out_dir: str) -> list[str]:
         """The reference's full product path (Gddp.scala:164-239):
         slice → mask → per-variable PNG, written with the
-        ``gddp<var><start>-<end>.png`` filename contract. Returns the
-        written paths."""
-        from netcdf_olap_spark.sinks import render_png, save_pngs
+        ``gddp<var><start>-<end>.png`` filename contract. Each image is
+        written by its rendering task; returns the written paths."""
+        from netcdf_olap_spark.sinks import render_png_files
 
-        rendered = render_png(self.apply(grid))
-        return save_pngs(rendered, out_dir, self.start_date, self.end_date)
+        manifest = render_png_files(self.apply(grid), out_dir, self.start_date, self.end_date)
+        return [row.path for row in manifest.collect()]

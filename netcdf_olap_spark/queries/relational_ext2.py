@@ -1024,14 +1024,18 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("o_orderkey", "o_orderdate")
     )
-    key_list = [r[0] for r in o.select("o_orderkey").collect()]
+    # the word cap bounds the key count (m_words ≤ cap ⇔ keys ≤
+    # max_keys); collect at most one key past it so an over-cap
+    # dimension side raises before its keys reach the driver
+    max_keys = MAX_BLOOM_LITERAL_WORDS * 63 // 10
+    key_list = [r[0] for r in o.select("o_orderkey").limit(max_keys + 1).collect()]
     n_keys = len(key_list)
-    m_words = max(1, (n_keys * 10 + 62) // 63)
-    if m_words > MAX_BLOOM_LITERAL_WORDS:
+    if n_keys > max_keys:
         raise ValueError(
-            f"{m_words} bloom words exceed the literal-array form's cap "
-            f"({MAX_BLOOM_LITERAL_WORDS}); use the broadcast-join bitmap"
+            f"more than {max_keys} bloom keys exceed the literal-array form's cap "
+            f"({MAX_BLOOM_LITERAL_WORDS} words); use the broadcast-join bitmap"
         )
+    m_words = max(1, (n_keys * 10 + 62) // 63)
     m_bits = m_words * 63
 
     def positions(col):

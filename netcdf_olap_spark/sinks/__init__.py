@@ -1,16 +1,12 @@
 """Sink stages: rendering and export are *sinks over DataFrames*.
 
-Two shapes per sink: a blob-row path (small masked product slices,
-in-memory zips, tests) and a scale path where each TASK writes its
-artifact to shared storage and returns only (path, size, checksum)
-manifest rows — the reference's own contract (Gddp.scala:235-236
-writes the PNG from inside the task), re-expressed so the driver
-never moves artifact bytes."""
+One shape per sink: each TASK writes its artifact to shared storage
+and returns only (path, size, checksum) manifest rows — the
+reference's own contract (Gddp.scala:235-236 writes the PNG from
+inside the task) — so the driver never moves artifact bytes."""
 
 from netcdf_olap_spark.sinks.naming import safe_component  # noqa: F401
 from netcdf_olap_spark.sinks.png import (  # noqa: F401
     png_filename,
-    render_png,
     render_png_files,
-    save_pngs,
 )

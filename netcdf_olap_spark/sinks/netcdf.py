@@ -26,15 +26,13 @@ tested in tests/test_netcdf_sink.py):
   outside the selection; the decoder drops NaN-coordinate cells at
   read time, so export∘ingest is the identity for ragged slices too.
 
-Scale: the PRIMARY path is :func:`export_netcdf_files` — each task
-writes its artifact to shared storage itself (exactly the reference's
-contract: Gddp.scala:235-236 writes the PNG from the task, not the
-driver) and only (path, size, checksum) manifest rows reach the
-driver, so a full-variable export at 100 TB never materializes a
-multi-GB blob in one Spark cell or on the driver. ``chunk`` splits
-large exports into one CF-consistent file per time window. The
-blob-carrying :func:`export_netcdf` remains for small in-memory uses
-(HTTP zip of a masked slice) and tests.
+Scale: :func:`export_netcdf_files` has each task write its artifact to
+shared storage itself (exactly the reference's contract:
+Gddp.scala:235-236 writes the PNG from the task, not the driver) and
+only (path, size, checksum) manifest rows reach the driver, so a
+full-variable export at 100 TB never materializes a multi-GB blob in
+one Spark cell or on the driver. ``chunk`` splits large exports into
+one CF-consistent file per time window.
 """
 
 from __future__ import annotations
@@ -44,28 +42,11 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-from netcdf_olap_spark.sinks import limits as _limits
-from netcdf_olap_spark.sinks.naming import safe_component
-
-NC_EXPORT_SCHEMA = StructType(
-    [
-        StructField("ds", StringType()),
-        StructField("variable", StringType()),
-        StructField("fmt", StringType()),
-        StructField("nt", IntegerType()),
-        StructField("ny", IntegerType()),
-        StructField("nx", IntegerType()),
-        StructField("n_valid", IntegerType()),
-        StructField("nc", BinaryType()),
-    ]
 )
 
 NC_MANIFEST_SCHEMA = StructType(
@@ -180,46 +161,6 @@ def _build_nc(pdf, fmt_: str, fill_: float, gzip_):
     return content, meta
 
 
-def export_netcdf(
-    df: DataFrame,
-    fmt: str = "classic",
-    fill_value: float = -9999.0,
-    gzip: int | None = None,
-) -> DataFrame:
-    """Long cube rows → one .nc artifact ROW per (ds, variable), file
-    bytes carried in the ``nc`` column.
-
-    This is the SMALL-artifact path (HTTP zip of a masked slice,
-    tests): one row per variable, bounded by what fits in a Spark cell
-    and driver memory. For full-variable exports use
-    :func:`export_netcdf_files`, which writes inside the task and
-    returns only manifest rows.
-
-    ``df`` must carry the grid-table columns
-    (ds, variable, time, y, x, lat, lon, value). ``fmt``: ``classic``
-    (CDF-1, the reference's GDDP input flavor) or ``hdf5`` (NetCDF-4
-    container; ``gzip`` adds chunked+deflate storage). Returns the
-    artifact DataFrame — pure, no side effects; pair with
-    ``save_netcdf`` to materialize files.
-    """
-    if fmt not in ("classic", "hdf5"):
-        raise ValueError(f"fmt must be 'classic' or 'hdf5', got {fmt!r}")
-    # the worker rebuilds cubes with the vendored writers — ship the
-    # package so executors can import them wherever the driver started
-    from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-    fmt_, fill_, gzip_ = fmt, float(fill_value), gzip
-
-    def _write(pdf):
-        import pandas as pd
-
-        content, meta = _build_nc(pdf, fmt_, fill_, gzip_)
-        return pd.DataFrame([{**meta, "nc": content}])
-
-    return df.groupBy("ds", "variable").applyInPandas(_write, NC_EXPORT_SCHEMA)
-
-
 def export_netcdf_files(
     df: DataFrame,
     out_dir: str,
@@ -228,13 +169,18 @@ def export_netcdf_files(
     gzip: int | None = None,
     chunk: str | None = None,
 ) -> DataFrame:
-    """Scale path: every artifact is written to ``out_dir`` INSIDE its
-    ``applyInPandas`` task — atomically, via ``tempfile`` +
-    ``os.replace`` — and only (path, size, sha256) manifest rows reach
-    the driver. This is the reference's own sink contract
-    (Gddp.scala:235-236 writes the PNG from the task, not the driver)
-    and it removes both the 2 GB single-cell ceiling and driver-memory
-    pressure from large exports.
+    """Long cube rows → one .nc file per (ds, variable[, time chunk]),
+    each written to ``out_dir`` INSIDE its ``applyInPandas`` task —
+    atomically, via ``tempfile`` + ``os.replace`` — and only (path,
+    size, sha256) manifest rows reach the driver. This is the
+    reference's own sink contract (Gddp.scala:235-236 writes the PNG
+    from the task, not the driver) and it removes both the 2 GB
+    single-cell ceiling and driver-memory pressure from large exports.
+
+    ``df`` must carry the grid-table columns
+    (ds, variable, time, y, x, lat, lon, value). ``fmt``: ``classic``
+    (CDF-1, the reference's GDDP input flavor) or ``hdf5`` (NetCDF-4
+    container; ``gzip`` adds chunked+deflate storage).
 
     ``out_dir`` must be a filesystem path visible to every executor
     AND the driver (local mode: trivially true; cluster: NFS/fuse
@@ -255,6 +201,8 @@ def export_netcdf_files(
         raise ValueError(f"fmt must be 'classic' or 'hdf5', got {fmt!r}")
     if chunk is not None and chunk not in ("year", "quarter", "month", "week", "day"):
         raise ValueError(f"chunk must be a date_trunc unit, got {chunk!r}")
+    # the worker rebuilds cubes with the vendored writers — ship the
+    # package so executors can import them wherever the driver started
     from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
 
     ensure_package_on_workers(df.sparkSession)
@@ -308,49 +256,3 @@ def export_netcdf_files(
         )
 
     return dfp.groupBy("ds", "variable", "__part").applyInPandas(_write_file, NC_MANIFEST_SCHEMA)
-
-
-def nc_filename(ds: str, variable: str, fmt: str) -> str:
-    """Filename contract mirroring the PNG sink's
-    (``gddp<variable>...``, Gddp.scala:236): ds + variable + format
-    suffix, always ``.nc`` (both flavors are .nc in the wild).
-    Components are validated — the vendored readers accept arbitrary
-    bytes as names, so traversal attempts fail here, before any file
-    or zip entry is created."""
-    safe_component(ds, "ds")
-    safe_component(variable, "variable")
-    safe_component(fmt, "fmt")
-    return f"{ds}_{variable}_{fmt}.nc"
-
-
-def save_netcdf(
-    artifacts: DataFrame, out_dir: str, max_bytes: int | None = _limits.MAX_DRIVER_ARTIFACT_BYTES
-) -> list[str]:
-    """Materialize blob-carrying export artifacts (from
-    :func:`export_netcdf`) to files — the small-slice path. Written
-    atomically (tempfile + ``os.replace``) so a concurrent reader of
-    ``out_dir`` never ingests a partial file. Guarded: raises before
-    collecting if the blob total exceeds ``max_bytes`` (default 256
-    MiB; ``None`` accepts the driver collect explicitly) — for large
-    exports use :func:`export_netcdf_files`, which never moves bytes
-    through the driver."""
-    import tempfile
-
-    artifacts = _limits.guard_driver_collect(
-        artifacts, "nc", "sinks.netcdf.export_netcdf_files", max_bytes
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    try:
-        rows = artifacts.collect()
-    finally:
-        # release the guard's executor-side pin (no-op when unpinned)
-        artifacts.unpersist()
-    for row in rows:
-        p = os.path.join(out_dir, nc_filename(row.ds, row.variable, row.fmt))
-        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".nc.tmp")
-        with os.fdopen(fd, "wb") as f:
-            f.write(bytes(row.nc))
-        os.replace(tmp, p)
-        paths.append(p)
-    return paths

@@ -23,18 +23,15 @@ with quantile breaks, and writes ``gddp<variable><start>-<end>.png``
 Scale: :func:`render_png_files` writes each image to shared storage
 INSIDE the rendering task (the reference's own contract —
 Gddp.scala:235-236 writes the PNG from the task, not the driver) and
-returns only (path, size, checksum) manifest rows; the blob-carrying
-:func:`render_png` remains for small in-memory zips and tests.
+returns only (path, size, checksum) manifest rows; image bytes never
+reach the driver.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -42,19 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from netcdf_olap_spark.sinks import limits as _limits
 from netcdf_olap_spark.sinks.naming import safe_component
-
-RENDER_SCHEMA = StructType(
-    [
-        StructField("variable", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_cells", IntegerType()),
-        StructField("n_valid", IntegerType()),
-        StructField("png", BinaryType()),
-    ]
-)
 
 PNG_MANIFEST_SCHEMA = StructType(
     [
@@ -82,19 +67,22 @@ def png_filename(variable: str, start_date: str, end_date: str, prefix: str = "g
     return f"{prefix}{variable}{start_date}-{end_date}.png"
 
 
-def _make_renderer(shared_breaks, n_breaks, write_spec=None):
+def _make_renderer(shared_breaks, n_breaks, write_spec):
     """Build the per-group render function. Nested (not module-level)
     so cloudpickle serializes it BY VALUE — executors need nothing on
     PYTHONPATH for the PNG path (unlike the NetCDF sink, which ships
     the package for its vendored writers).
 
-    ``write_spec``: None → return blob rows (RENDER_SCHEMA);
-    (out_dir, start_date, end_date, prefix) → write the file in-task
-    (tempfile + os.replace, atomic) and return manifest rows
-    (PNG_MANIFEST_SCHEMA)."""
+    ``write_spec`` = (out_dir, start_date, end_date, prefix): the task
+    writes the file (tempfile + os.replace, atomic) and returns one
+    manifest row (PNG_MANIFEST_SCHEMA)."""
 
     def _render(pdf):
+        import hashlib
+        import os
+        import re
         import struct
+        import tempfile
         import zlib
 
         import numpy as np
@@ -173,46 +161,35 @@ def _make_renderer(shared_breaks, n_breaks, write_spec=None):
 
         rgba = rgba[::-1]  # vertical flip: row 0 = north (README.md:82 fixup)
         png = encode_png(np.ascontiguousarray(rgba))
-        meta = {
-            "variable": variable,
-            "width": w,
-            "height": h,
-            "n_cells": int(h * w),
-            "n_valid": int(finite.size),
-        }
-        if write_spec is None:
-            return pd.DataFrame([{**meta, "png": png}])
-
-        import hashlib
-        import os as _os
-        import re as _re
-        import tempfile as _tempfile
-
         out_dir, start_date, end_date, prefix = write_spec
         # inline twin of sinks.naming.safe_component (closure stays
         # import-free on executors): reject traversal-capable names
         for what, nm in (("variable", variable), ("prefix", prefix),
                          ("start_date", start_date), ("end_date", end_date)):
-            if (not nm or _re.search(r"[\x00-\x1f/\\]", nm) or ".." in nm
+            if (not nm or re.search(r"[\x00-\x1f/\\]", nm) or ".." in nm
                     or nm != nm.strip() or nm.startswith(".")):
                 raise ValueError(f"{what} {nm!r} is not a safe filename component")
-        _os.makedirs(out_dir, exist_ok=True)
-        final = _os.path.join(out_dir, f"{prefix}{variable}{start_date}-{end_date}.png")
-        fd, tmp = _tempfile.mkstemp(dir=out_dir, suffix=".png.tmp")
+        os.makedirs(out_dir, exist_ok=True)
+        final = os.path.join(out_dir, f"{prefix}{variable}{start_date}-{end_date}.png")
+        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".png.tmp")
         try:
-            with _os.fdopen(fd, "wb") as f:
+            with os.fdopen(fd, "wb") as f:
                 f.write(png)
-            _os.replace(tmp, final)  # atomic: no partial files visible
+            os.replace(tmp, final)  # atomic: no partial files visible
         except BaseException:
             try:
-                _os.unlink(tmp)
+                os.unlink(tmp)
             except OSError:
                 pass
             raise
         return pd.DataFrame(
             [
                 {
-                    **meta,
+                    "variable": variable,
+                    "width": w,
+                    "height": h,
+                    "n_cells": int(h * w),
+                    "n_valid": int(finite.size),
                     "path": final,
                     "size": len(png),
                     "sha256": hashlib.sha256(png).hexdigest(),
@@ -236,16 +213,6 @@ def _shared_breaks(df: DataFrame, n_breaks: int, global_breaks: bool):
     return df.where(F.col("value").isNotNull()).approxQuantile("value", probs, 0.001)
 
 
-def render_png(df: DataFrame, n_breaks: int = 16, global_breaks: bool = False) -> DataFrame:
-    """Render one PNG per variable from a long (variable, y, x, value)
-    DataFrame (already sliced/masked upstream). Returns a small
-    DataFrame of image artifacts (bytes in the ``png`` column) — pure,
-    no side effects. SMALL-artifact path: for anything bigger than a
-    masked product slice, use :func:`render_png_files`."""
-    fn = _make_renderer(_shared_breaks(df, n_breaks, global_breaks), n_breaks)
-    return df.select("variable", "y", "x", "value").groupBy("variable").applyInPandas(fn, RENDER_SCHEMA)
-
-
 def render_png_files(
     df: DataFrame,
     out_dir: str,
@@ -255,11 +222,13 @@ def render_png_files(
     n_breaks: int = 16,
     global_breaks: bool = False,
 ) -> DataFrame:
-    """Scale path: each image is written to ``out_dir`` inside its own
-    rendering task (atomic tempfile + ``os.replace``) with the
-    reference's filename contract; only (path, size, sha256) manifest
-    rows reach the driver. ``out_dir`` must be visible to executors
-    and driver (local mode / NFS / shared volume)."""
+    """Render one PNG per variable from a long (variable, y, x, value)
+    DataFrame (already sliced/masked upstream). Each image is written
+    to ``out_dir`` inside its own rendering task (atomic tempfile +
+    ``os.replace``) with the reference's filename contract; only
+    (path, size, sha256) manifest rows reach the driver. ``out_dir``
+    must be visible to executors and driver (local mode / NFS / shared
+    volume)."""
     # fail fast on the driver for caller-supplied components; variable
     # names (data-derived) are re-checked inside the task
     safe_component(prefix, "prefix")
@@ -275,37 +244,3 @@ def render_png_files(
         .groupBy("variable")
         .applyInPandas(fn, PNG_MANIFEST_SCHEMA)
     )
-
-
-def save_pngs(
-    rendered: DataFrame,
-    out_dir: str,
-    start_date: str,
-    end_date: str,
-    prefix: str = "gddp",
-    max_bytes: int | None = _limits.MAX_DRIVER_ARTIFACT_BYTES,
-) -> list[str]:
-    """Materialize blob-carrying rendered images (from
-    :func:`render_png`) to files with the reference's filename
-    contract — atomic writes, small-slice path. Guarded: raises before
-    collecting if the blob total exceeds ``max_bytes`` (default 256
-    MiB; ``None`` accepts the driver collect explicitly) — for large
-    renders use :func:`render_png_files`."""
-    import tempfile
-
-    rendered = _limits.guard_driver_collect(rendered, "png", "sinks.png.render_png_files", max_bytes)
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    try:
-        rows = rendered.collect()
-    finally:
-        # release the guard's executor-side pin (no-op when unpinned)
-        rendered.unpersist()
-    for row in rows:
-        p = os.path.join(out_dir, png_filename(row.variable, start_date, end_date, prefix))
-        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".png.tmp")
-        with os.fdopen(fd, "wb") as f:
-            f.write(bytes(row.png))
-        os.replace(tmp, p)
-        paths.append(p)
-    return paths

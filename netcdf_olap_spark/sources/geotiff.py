@@ -230,10 +230,6 @@ def _values(tags, tag, en, default=None):
     return list(struct.unpack(f"{en}{cnt}{fmt}", payload))
 
 
-def is_tiff(content: bytes) -> bool:
-    return content[:4] in (b"II*\0", b"MM\0*")
-
-
 def read_geotiff(content: bytes) -> dict:
     """→ dict(data 2-D float64 with NoData→NaN, lat0, lon0, dlat,
     dlon).  Big-endian (MM) files are handled; BigTIFF and rotated

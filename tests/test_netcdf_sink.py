@@ -1,7 +1,7 @@
 """NetCDF export sink (sinks/netcdf.py): export∘ingest is identity.
 
 The loop under test: raw arrays → (ingest) long cube → (export) .nc
-bytes in both formats → (re-ingest through the distributed path) →
+files in both formats → (re-ingest through the distributed path) →
 identical long cube. Exercises the vendored writers as first-class
 sinks, NULL↔_FillValue inversion, the hours-since-1990 re-encode, and
 curvilinear 2-D coordinate round-tripping.
@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from netcdf_olap_spark.sinks.netcdf import export_netcdf, save_netcdf
+from netcdf_olap_spark.sinks.netcdf import export_netcdf_files
 from netcdf_olap_spark.sources import netcdf as src
 
 NT, NY, NX = 4, 3, 5
@@ -42,15 +42,12 @@ def _rows(df):
 @pytest.mark.parametrize("fmt,gzip", [("classic", None), ("hdf5", None), ("hdf5", 6)])
 def test_export_then_ingest_is_identity(spark, tmp_path, fmt, gzip):
     cube, _data = _cube_df(spark, seed=7)
-    artifacts = export_netcdf(cube, fmt=fmt, gzip=gzip)
-    rows = artifacts.collect()
+    rows = export_netcdf_files(cube, tmp_path / "out", fmt=fmt, gzip=gzip).collect()
     assert len(rows) == 1
     a = rows[0]
     assert (a.nt, a.ny, a.nx) == (NT, NY, NX)
     assert a.n_valid == NT * NY * NX - 2
-
-    paths = save_netcdf(artifacts, str(tmp_path / "out"))
-    assert len(paths) == 1 and paths[0].endswith(".nc")
+    assert a.path.endswith(".nc")
 
     back = src.ingest_directory(spark, str(tmp_path / "out"), ds="exp")
     assert _rows(back) == _rows(cube)
@@ -58,7 +55,7 @@ def test_export_then_ingest_is_identity(spark, tmp_path, fmt, gzip):
 
 def test_export_curvilinear_coords_roundtrip(spark, tmp_path):
     cube, _ = _cube_df(spark, seed=9, curvilinear=True)
-    save_netcdf(export_netcdf(cube, fmt="hdf5"), str(tmp_path / "o"))
+    export_netcdf_files(cube, tmp_path / "o", fmt="hdf5").collect()
     back = src.ingest_directory(spark, str(tmp_path / "o"), ds="exp")
     assert _rows(back) == _rows(cube)
 
@@ -67,22 +64,19 @@ def test_export_one_artifact_per_variable(spark, tmp_path):
     a, _ = _cube_df(spark, var="tas", seed=1)
     b, _ = _cube_df(spark, var="pr", seed=2)
     cube = a.union(b)
-    artifacts = export_netcdf(cube, fmt="classic")
-    got = {(r.ds, r.variable): r for r in artifacts.collect()}
-    assert set(got) == {("exp", "tas"), ("exp", "pr")}
-    paths = save_netcdf(artifacts, str(tmp_path / "multi"))
-    assert len(paths) == 2
+    rows = export_netcdf_files(cube, tmp_path / "multi", fmt="classic").collect()
+    assert sorted((r.ds, r.variable) for r in rows) == [("exp", "pr"), ("exp", "tas")]
     back = src.ingest_directory(spark, str(tmp_path / "multi"), ds="exp")
     assert _rows(back) == _rows(cube)
 
 
-def test_export_rejects_sub_hour_times(spark):
+def test_export_rejects_sub_hour_times(spark, tmp_path):
     cube, _ = _cube_df(spark, seed=3)
     from pyspark.sql import functions as F
 
     shifted = cube.withColumn("time", F.col("time") + F.expr("INTERVAL 30 MINUTES"))
     with pytest.raises(Exception, match="hour-aligned"):
-        export_netcdf(shifted, fmt="classic").collect()
+        export_netcdf_files(shifted, tmp_path, fmt="classic").collect()
 
 
 def test_export_windowed_slice_keeps_original_indices(spark, tmp_path):
@@ -94,7 +88,7 @@ def test_export_windowed_slice_keeps_original_indices(spark, tmp_path):
 
     cube, _ = _cube_df(spark, seed=21)
     window = cube.where(F.col("y").between(1, 2) & F.col("x").between(2, 4))
-    save_netcdf(export_netcdf(window, fmt="hdf5"), str(tmp_path / "w"))
+    export_netcdf_files(window, tmp_path / "w", fmt="hdf5").collect()
     back = src.ingest_directory(spark, str(tmp_path / "w"), ds="exp")
     assert _rows(back) == _rows(window)
     ys = sorted(r.y for r in back.select("y").distinct().collect())
@@ -126,7 +120,7 @@ def test_fractional_hours_decode_exact(spark):
     assert times == [pd.Timestamp("1990-01-01 12:30:00"), pd.Timestamp("1990-01-02 12:15:00")]
 
 
-def test_export_rejects_sub_hour_times_far_from_epoch(spark):
+def test_export_rejects_sub_hour_times_far_from_epoch(spark, tmp_path):
     """The hour-alignment check is exact integer arithmetic: a
     30-minute offset in 2026 (where a relative float tolerance of the
     ~321000-hour magnitude would span hours) must still be rejected."""
@@ -136,21 +130,20 @@ def test_export_rejects_sub_hour_times_far_from_epoch(spark):
     cube, _ = _cube_df(spark, seed=2)
     shifted = cube.withColumn("time", F.col("time") + F.expr("INTERVAL 36 YEARS") + F.expr("INTERVAL 30 MINUTES"))
     with pytest.raises(Exception, match="hour-aligned"):
-        export_netcdf(shifted, fmt="classic").collect()
+        export_netcdf_files(shifted, tmp_path, fmt="classic").collect()
 
 
-def test_hdf5_export_attaches_dimension_scales(spark):
+def test_hdf5_export_attaches_dimension_scales(spark, tmp_path):
     """hdf5-flavor exports carry DIMENSION_LIST so external netCDF-4
     tools resolve time/y/x structurally, and re-ingest through our own
     reader sees the attachment."""
     from pyspark.sql import functions as F
 
     from netcdf_olap_spark.session import load_grid
-    from netcdf_olap_spark.sinks.netcdf import export_netcdf
     from netcdf_olap_spark.sources.hdf5 import read_hdf5
 
     var = load_grid(spark, register=False).select("variable").first()[0]
     g = load_grid(spark, register=False).where(F.col("variable") == var).limit(300)
-    row = export_netcdf(g, fmt="hdf5").first()
-    f = read_hdf5(bytes(row.nc))
+    row = export_netcdf_files(g, tmp_path, fmt="hdf5").first()
+    f = read_hdf5(open(row.path, "rb").read())
     assert f.dim_scales == {var: ["time", "y", "x"]}

@@ -8,6 +8,8 @@ from __future__ import annotations
 import math
 import re
 
+import pytest
+
 from tests.conftest import SF_SMALL
 
 
@@ -120,6 +122,16 @@ def test_bloom_pruned_join_tests_bitmap_in_fact_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "element_at" in plan
     assert "Join" in plan
+
+
+def test_bloom_pruned_join_caps_keys_before_collect(spark, monkeypatch):
+    """join_bloom_pruned collects at most one key past the cap and
+    raises: a 1-word cap allows 6 keys, and sf0.001 has more."""
+    from netcdf_olap_spark.queries import relational_ext2
+
+    monkeypatch.setattr(relational_ext2, "MAX_BLOOM_LITERAL_WORDS", 1)
+    with pytest.raises(ValueError, match="more than 6 bloom keys"):
+        relational_ext2.join_bloom_pruned(spark, SF_SMALL)
 
 
 def test_pettitt_matches_bruteforce(spark):

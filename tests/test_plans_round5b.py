@@ -42,7 +42,7 @@ def test_export_roundtrip_single_python_stage_each_way(spark):
         _export_roundtrip_lazy(spark)._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("MapInPandas") == 1  # re-ingest decode
-    # export runs inside save_netcdf() eagerly, so the lazy plan is
+    # the export's manifest collect runs eagerly, so the lazy plan is
     # the re-ingest aggregate only; its shuffle budget matches ingest
     assert plan.count("Exchange hashpartitioning") <= 1
     # and the registry form really is the materialized cut

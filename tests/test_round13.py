@@ -6,6 +6,7 @@
    generate_series returns empty).
 2. bench.py's final stdout line stays bounded (r12 judge ask #2 —
    the full medians map overflowed the driver's 2,000-char capture).
+3. bench.py's ``plan_fp2`` strips only lambda-binder counters.
 """
 
 from __future__ import annotations
@@ -79,3 +80,18 @@ def test_bench_final_line_is_bounded():
     src = (pathlib.Path(__file__).parent.parent / "bench.py").read_text()
     assert '"queries": top5' in src and "[:5]" in src
     ast.parse(src)
+
+
+def test_plan_fingerprint2_strips_only_lambda_counters(spark):
+    """Columns ``a_1`` / ``a_2`` stay distinct under ``plan_fp2``; two
+    builds of one ``F.transform`` plan, whose lambda variables carry
+    different session-counter names (``lambda x_N``), hash equal."""
+    from bench import plan_fingerprint, plan_fingerprint2
+
+    base = spark.range(3)
+    assert plan_fingerprint2(base.selectExpr("id AS a_1")) != plan_fingerprint2(
+        base.selectExpr("id AS a_2")
+    )
+    a, b = (base.select(F.transform(F.array("id"), lambda x: x + 1)) for _ in range(2))
+    assert plan_fingerprint(a) != plan_fingerprint(b)  # the counter moved
+    assert plan_fingerprint2(a) == plan_fingerprint2(b)

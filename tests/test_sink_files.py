@@ -7,8 +7,8 @@ Three contracts under test:
    (atomic tempfile + os.replace) and return (path, size, sha256) rows;
    the bytes never ride in a Spark cell. A chunked export splits one
    variable across multiple CF-consistent files, so no single task
-   ever builds the whole variable's cube (the 2 GB-cell / driver-memory
-   ceiling the blob path had).
+   ever builds the whole variable's cube (no 2 GB-cell or
+   driver-memory ceiling).
 2. **Hostile names can't escape** — the vendored readers accept
    arbitrary bytes as dataset/variable names, so every sink filename
    component is validated (sinks/naming.safe_component); traversal
@@ -30,7 +30,7 @@ import numpy as np
 import pytest
 
 from netcdf_olap_spark.sinks.naming import safe_component
-from netcdf_olap_spark.sinks.netcdf import export_netcdf, export_netcdf_files, nc_filename
+from netcdf_olap_spark.sinks.netcdf import export_netcdf_files
 from netcdf_olap_spark.sinks.png import png_filename, render_png_files
 from netcdf_olap_spark.sources import netcdf as src
 
@@ -90,16 +90,6 @@ def test_chunked_export_splits_by_time_window(spark, tmp_path):
     assert _rows(back) == _rows(cube)
 
 
-def test_files_export_matches_blob_export_bytes(spark, tmp_path):
-    """Same builder on both paths: the task-written file is byte-equal
-    to the blob the small path would have carried."""
-    cube = _cube_df(spark, seed=17)
-    out = str(tmp_path / "eq")
-    man = export_netcdf_files(cube, out, fmt="classic").collect()
-    blob_rows = export_netcdf(cube, fmt="classic").collect()
-    assert open(man[0].path, "rb").read() == bytes(blob_rows[0].nc)
-
-
 def test_png_files_manifest(spark, tmp_path):
     cube = _cube_df(spark, seed=19)
     out = str(tmp_path / "pngs")
@@ -136,28 +126,32 @@ def test_safe_component_accepts_normal_names():
         assert safe_component(ok) == ok
 
 
-def test_nc_filename_rejects_traversal():
-    with pytest.raises(ValueError):
-        nc_filename("../../etc", "tas", "classic")
-    with pytest.raises(ValueError):
-        nc_filename("exp", "../x", "classic")
-
-
 def test_png_filename_rejects_traversal():
     with pytest.raises(ValueError):
         png_filename("../x", "1990-01-01", "1990-01-02")
 
 
-def test_files_export_rejects_hostile_variable(spark, tmp_path):
-    """A crafted file can carry any bytes as a variable name — the
-    write task must fail, not escape out_dir."""
-    cube = _cube_df(spark, var="tas", seed=29).withColumnRenamed("variable", "v")
-    cube = cube.selectExpr("ds", "'../../pwned' AS variable", "time", "y", "x", "lat", "lon", "value")
-    out = str(tmp_path / "hostile")
-    with pytest.raises(Exception, match="path separator|not a safe|contains"):
-        export_netcdf_files(cube, out, fmt="classic").collect()
-    # nothing escaped: the parent temp dir holds only our out_dir
-    assert not os.path.exists(str(tmp_path / "pwned"))
+@pytest.mark.parametrize("column", ["ds", "variable"])
+@pytest.mark.parametrize("sink", ["export_netcdf_files", "render_png_files"])
+def test_files_export_rejects_hostile_variable(spark, tmp_path, sink, column):
+    """A crafted file can carry any bytes as a ds/variable name: a task
+    whose filename uses the name must fail, and nothing may land
+    outside out_dir (PNG names carry no ds, so that case writes)."""
+    from pyspark.sql import functions as F
+
+    cube = _cube_df(spark, seed=29).withColumn(column, F.lit("../../pwned"))
+    out = tmp_path / "deep" / "hostile"
+    if sink == "export_netcdf_files":
+        manifest = export_netcdf_files(cube, str(out), fmt="classic")
+    else:
+        manifest = render_png_files(cube, str(out), "1990-01-01", "1990-01-06")
+    if (sink, column) == ("render_png_files", "ds"):
+        manifest.collect()
+    else:
+        with pytest.raises(Exception, match="not a safe|contains"):
+            manifest.collect()
+    assert all(out in p.parents for p in tmp_path.rglob("*") if p.is_file())
+    assert not list(tmp_path.parent.glob("*pwned*"))
 
 
 # -- 3. ragged selections ---------------------------------------------------
@@ -182,35 +176,3 @@ def test_ragged_selection_roundtrip_identity(spark, tmp_path):
         F.min("lon").alias("c"), F.max("lon").alias("d"),
     ).collect()[0]
     assert all(np.isfinite(v) for v in agg)
-
-
-def test_legacy_collect_sinks_guarded(spark, tmp_path):
-    """save_netcdf/save_pngs price the driver collect FIRST (Spark-side
-    octet_length sum) and raise over the ceiling, pointing at the
-    executor-side manifest path; max_bytes=None accepts explicitly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from netcdf_olap_spark.sinks.netcdf import export_netcdf, save_netcdf
-    from netcdf_olap_spark.sinks.png import render_png, save_pngs
-    from netcdf_olap_spark.session import load_grid
-
-    var = load_grid(spark, register=False).select("variable").first()[0]
-    g = load_grid(spark, register=False).where(F.col("variable") == var).limit(400)
-    arts = export_netcdf(g)
-    with pytest.raises(ValueError, match="render_png_files|export_netcdf_files"):
-        save_netcdf(arts, str(tmp_path / "nc"), max_bytes=10)
-    # explicit opt-out collects
-    paths = save_netcdf(arts, str(tmp_path / "nc2"), max_bytes=None)
-    assert paths and all(p.endswith(".nc") for p in paths)
-
-    imgs = render_png(g)
-    with pytest.raises(ValueError, match="render_png_files"):
-        save_pngs(imgs, str(tmp_path / "png"), "2020-01-01", "2020-01-02", max_bytes=10)
-    # success path must release the guard's executor-side pin — a
-    # long-lived API process calling save_* repeatedly must not
-    # accumulate pinned artifact blocks
-    n_before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    paths = save_pngs(imgs, str(tmp_path / "png2"), "2020-01-01", "2020-01-02")
-    assert paths and all(p.endswith(".png") for p in paths)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_before

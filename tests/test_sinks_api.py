@@ -8,13 +8,14 @@ import json
 import struct
 import zipfile
 import zlib
+from pathlib import Path
 
 import pytest
 
 from netcdf_olap_spark.plans import CubeQuery
 from netcdf_olap_spark.queries.grid import POLYGON
 from netcdf_olap_spark.session import load_grid
-from netcdf_olap_spark.sinks import png_filename, render_png
+from netcdf_olap_spark.sinks import png_filename, render_png_files
 
 
 def _png_size(data: bytes) -> tuple[int, int]:
@@ -55,15 +56,21 @@ def query():
     )
 
 
-def test_render_png_dimensions_and_mask(spark, query):
-    rendered = {r.variable: r for r in render_png(query.apply(load_grid(spark, register=False))).collect()}
+def _render(sliced, out_dir, query, **kw) -> dict:
+    """variable → (manifest row, PNG bytes read from the manifest path)."""
+    manifest = render_png_files(sliced, str(out_dir), query.start_date, query.end_date, **kw)
+    return {r.variable: (r, Path(r.path).read_bytes()) for r in manifest.collect()}
+
+
+def test_render_png_dimensions_and_mask(spark, query, tmp_path):
+    rendered = _render(query.apply(load_grid(spark, register=False)), tmp_path, query)
     assert set(rendered) == set(query.variables)
-    for var, row in rendered.items():
-        w, h = _png_size(bytes(row.png))
+    for var, (row, png) in rendered.items():
+        w, h = _png_size(png)
         assert (w, h) == (row.width, row.height)
         assert 0 < row.n_valid <= row.n_cells
         # polygon-masked corners → some transparent pixels, not all
-        n_transparent = _png_alpha_zero_count(bytes(row.png))
+        n_transparent = _png_alpha_zero_count(png)
         assert 0 < n_transparent < w * h
 
 
@@ -126,24 +133,31 @@ def test_api_bad_request(spark):
     r = client.post("/fetchResult", data=json.dumps({"selectDate": ""}), content_type="application/json")
     assert r.status_code == 400
     assert "bad request" in r.get_json()["message"]
+    # dates the engine's cast rejects: JSON 500 naming the exception class
+    payload = {"selectDate": "garbage,junk", "variables": ["LST_LWST_avg_daily"]}
+    r = client.post("/fetchResult", data=json.dumps(payload), content_type="application/json")
+    assert r.status_code == 500 and r.get_json()["error"]
+    assert r.get_json()["message"].startswith("engine error")
+    # lenient (non-zero-padded) dates are still served
+    payload["selectDate"] = "1990-1-5,1990-1-12"
+    r = client.post("/fetchResult", data=json.dumps(payload), content_type="application/json")
+    assert r.status_code == 200 and r.mimetype == "application/zip"
 
 
-def test_render_global_vs_slice_breaks(spark, query):
+def test_render_global_vs_slice_breaks(spark, query, tmp_path):
     """O9 both modes: global breaks give all variables one color
     scale; per-slice breaks differ per variable — so the PNG bytes of
     at least one variable differ between modes, while geometry and
     valid-cell counts are identical."""
     sliced = query.apply(load_grid(spark, register=False))
-    per_slice = {r["variable"]: r for r in render_png(sliced).collect()}
-    global_ = {r["variable"]: r for r in render_png(sliced, global_breaks=True).collect()}
+    per_slice = _render(sliced, tmp_path / "slice", query)
+    global_ = _render(sliced, tmp_path / "global", query, global_breaks=True)
     assert set(per_slice) == set(global_)
-    for v in per_slice:
-        assert (per_slice[v]["width"], per_slice[v]["height"]) == (
-            global_[v]["width"],
-            global_[v]["height"],
-        )
-        assert per_slice[v]["n_valid"] == global_[v]["n_valid"]
-    assert any(bytes(per_slice[v]["png"]) != bytes(global_[v]["png"]) for v in per_slice)
+    for v, (row, _png) in per_slice.items():
+        g_row = global_[v][0]
+        assert (row.width, row.height) == (g_row.width, g_row.height)
+        assert row.n_valid == g_row.n_valid
+    assert any(per_slice[v][1] != global_[v][1] for v in per_slice)
 
 
 def test_datasets_catalog(spark):
