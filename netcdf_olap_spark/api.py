@@ -4,7 +4,7 @@ Same routes and payloads as the reference server (main.py):
 
 - ``GET /getBoundary`` → dataset boundary bbox (main.py:93-96; the
   reference hardcodes the Great Lakes bbox — we compute it from the
-  coords table, once, at app startup).
+  served cube on first call and keep it).
 - ``POST /fetchResult`` with JSON ``{geoJson, selectDate, variables}``
   (main.py:22-24 / map.jsx:117-121) → ``application/zip`` of one PNG
   per variable named ``gddp<var><start>-<end>.png`` (main.py:113-127).
@@ -14,19 +14,30 @@ instead of a spark-submit subprocess per query (main.py:106-110), the
 polygon travels in-memory instead of through a geojson.json file on
 disk, and errors return proper JSON + status codes instead of the
 reference's ``'{message: "Server Error"}'`` string (main.py:131-132).
+
+Every request of one app reads ONE served grid: the cube is listed
+once, cached in memory by the first request that scans it, and kept
+until the app exits. The cached scan skips 10,000-row batches by their
+per-column min/max — the hyperslab read of Gddp.scala:223-228 — which
+the Parquet scan cannot do here: Spark has no Parquet pushdown for
+``time`` stored as a non-UTC-adjusted timestamp, so every request
+would read every day. The cube is assumed static for the app's lifetime.
 """
 
 from __future__ import annotations
 
+import functools
 import io
 import json
 import os
 import tempfile
 import zipfile
 
+from pyspark.sql import DataFrame
+
 from netcdf_olap_spark.operators.spatial import parse_geojson_polygon
 from netcdf_olap_spark.plans import CubeQuery
-from netcdf_olap_spark.session import get_spark, load_coords, load_grid
+from netcdf_olap_spark.session import datasets_catalog, get_spark, load_grid
 from netcdf_olap_spark.sinks import render_png_files
 
 
@@ -65,8 +76,8 @@ def _zip_manifest(manifest_rows) -> bytes:
     return buf.getvalue()
 
 
-def result_zip(spark, q: CubeQuery, fmt: str = "png") -> bytes:
-    """Run the query and zip its artifacts (main.py:113-126).
+def result_zip(grid: DataFrame, q: CubeQuery, fmt: str = "png") -> bytes:
+    """Run the query over ``grid`` and zip its artifacts (main.py:113-126).
 
     ``fmt``: ``png`` renders one image per variable; ``nc`` / ``nc4``
     export the sliced cube itself as one classic CDF-1 / NetCDF-4 file
@@ -77,7 +88,7 @@ def result_zip(spark, q: CubeQuery, fmt: str = "png") -> bytes:
     driver only collects (path, size, checksum) manifest rows and zips
     the finished files."""
     with tempfile.TemporaryDirectory(prefix="nolap_api_") as td:
-        sliced = q.apply(load_grid(spark, register=False))
+        sliced = q.apply(grid)
         if fmt == "png":
             manifest = render_png_files(sliced, td, q.start_date, q.end_date)
         else:
@@ -91,11 +102,23 @@ def result_zip(spark, q: CubeQuery, fmt: str = "png") -> bytes:
 
 
 def create_app(spark=None):
-    """Flask app factory. ``spark`` injectable for tests."""
+    """Flask app factory. ``spark`` injectable for tests.
+
+    Lists the cube once and keeps it as the served grid (module
+    docstring) in ``app.extensions["served_grid"]``; the cache is
+    filled by the first request that scans it, not here."""
     from flask import Flask, jsonify, request, send_file
 
     app = Flask("netcdf-olap-spark")
     spark = spark or get_spark("api")
+    # sortWithinPartitions keeps each cached batch inside one variable
+    # and a narrow time span whatever the file order, so the batch
+    # min/max stats prune. It also gives the cached plan a shape that
+    # no plain load_grid() plan matches: a bare persist() of the grid
+    # would be substituted into every later load_grid() query of the
+    # session, replacing their Parquet scans and pushed filters.
+    grid = load_grid(spark, register=False).sortWithinPartitions("variable", "time").persist()
+    app.extensions["served_grid"] = grid
 
     client = os.path.join(os.path.dirname(os.path.abspath(__file__)), "webclient", "index.html")
 
@@ -105,44 +128,43 @@ def create_app(spark=None):
         # map.jsx); this serves the dependency-free static counterpart
         return send_file(client, mimetype="text/html")
 
-    coords = load_coords(spark, register=False)
-    row = coords.selectExpr(
-        "min(lat) AS lat_min", "max(lat) AS lat_max", "min(lon) AS lon_min", "max(lon) AS lon_max"
-    ).collect()[0]
-    boundary = {
-        "lat_min": row.lat_min,
-        "lat_max": row.lat_max,
-        "lon_min": row.lon_min,
-        "lon_max": row.lon_max,
-    }
+    # dataset registry for the map UI — the engine-computed form of the
+    # reference's hardcoded Dataset entries (map.jsx:15-23: id, boundary,
+    # description, headerAttributes), one rectangle + tooltip each.
+    # Computed on first call (concurrent first calls may both compute
+    # it; the result is the same).
+    @functools.cache
+    def catalog() -> list[dict]:
+        return [
+            {
+                "ds": r["ds"],
+                "variables": list(r["variables"]),
+                "lat_min": r["lat_min"],
+                "lat_max": r["lat_max"],
+                "lon_min": r["lon_min"],
+                "lon_max": r["lon_max"],
+                "n_cells": r["n_cells"],
+                "time_min": r["time_min"].isoformat(),
+                "time_max": r["time_max"].isoformat(),
+            }
+            for r in datasets_catalog(grid).collect()
+        ]
 
     @app.get("/getBoundary")
     def get_boundary():
-        return jsonify(boundary)
-
-    # dataset registry for the map UI — the engine-computed form of the
-    # reference's hardcoded Dataset entries (map.jsx:15-23: id, boundary,
-    # description, headerAttributes), one rectangle + tooltip each
-    from netcdf_olap_spark.session import datasets_catalog
-
-    cat_rows = [
-        {
-            "ds": r["ds"],
-            "variables": list(r["variables"]),
-            "lat_min": r["lat_min"],
-            "lat_max": r["lat_max"],
-            "lon_min": r["lon_min"],
-            "lon_max": r["lon_max"],
-            "n_cells": r["n_cells"],
-            "time_min": r["time_min"].isoformat(),
-            "time_max": r["time_max"].isoformat(),
-        }
-        for r in datasets_catalog(spark).collect()
-    ]
+        cat = catalog()
+        return jsonify(
+            {
+                "lat_min": min((d["lat_min"] for d in cat), default=None),
+                "lat_max": max((d["lat_max"] for d in cat), default=None),
+                "lon_min": min((d["lon_min"] for d in cat), default=None),
+                "lon_max": max((d["lon_max"] for d in cat), default=None),
+            }
+        )
 
     @app.get("/datasets")
     def get_datasets():
-        return jsonify(cat_rows)
+        return jsonify(catalog())
 
     @app.post("/fetchResult")
     def fetch_result():
@@ -155,7 +177,7 @@ def create_app(spark=None):
         except (ValueError, KeyError, TypeError) as ex:
             return jsonify({"message": f"bad request: {ex}"}), 400
         try:
-            data = result_zip(spark, q, fmt)
+            data = result_zip(grid, q, fmt)
         except Exception as ex:  # engine failure: JSON, not Flask's HTML 500 page
             app.logger.exception("fetchResult failed")
             return jsonify({"message": f"engine error: {ex}", "error": type(ex).__name__}), 500

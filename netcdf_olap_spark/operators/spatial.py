@@ -27,6 +27,7 @@ boundary sees only the envelope's cells, not the full cube.
 from __future__ import annotations
 
 import json
+import math
 from typing import Iterable, Sequence
 
 import numpy as np
@@ -60,6 +61,11 @@ def parse_geojson_polygon(text: str) -> list[tuple[float, float]]:
     """S7: extract the first Polygon's outer ring from GeoJSON
     (Feature, FeatureCollection, or bare geometry — the shapes the
     reference round-trips through main.py:51-87 / Gddp.scala:143-148).
+
+    Rejects (``ValueError``) non-finite coordinates — Python's JSON
+    parser accepts ``NaN``/``Infinity`` — and rings with fewer than 4
+    positions once closed (GeoJSON's minimum; a 2-point ring encloses
+    nothing).
     """
     obj = json.loads(text)
     if obj.get("type") == "FeatureCollection":
@@ -69,8 +75,12 @@ def parse_geojson_polygon(text: str) -> list[tuple[float, float]]:
     if obj.get("type") != "Polygon":
         raise ValueError(f"expected Polygon, got {obj.get('type')}")
     ring = [(float(lon), float(lat)) for lon, lat in obj["coordinates"][0]]
-    if ring[0] != ring[-1]:
+    if not all(math.isfinite(v) for p in ring for v in p):
+        raise ValueError("polygon coordinates must be finite")
+    if ring and ring[0] != ring[-1]:
         ring.append(ring[0])
+    if len(ring) < 4:
+        raise ValueError(f"polygon ring needs at least 4 positions, got {len(ring)}")
     return ring
 
 
@@ -138,18 +148,28 @@ def in_polygon_expr(ring: Ring) -> Column:
 
     Preferred at scale: no Arrow boundary, no Python workers in the
     flagship path — the whole slice-mask-aggregate plan is one codegen
-    span over the parquet scan."""
-    lat, lon = F.col("lat"), F.col("lon")
-    inside: Column = F.lit(False)
+    span over the parquet scan.
+
+    Built as ONE SQL string parsed once: composing it from Column
+    objects costs ~100 py4j calls per ring. ``repr(float) + "D"`` is an
+    exact double literal (repr round-trips), so the parsed tree is the
+    one ``F.lit`` columns would compose to; the XOR chain is left-associative without
+    nested parentheses. Ring coordinates must be finite (guaranteed by
+    ``parse_geojson_polygon``): ``inf``/``nan`` have no SQL literal."""
+
+    def dlit(v: float) -> str:
+        return repr(float(v)) + "D"
+
+    terms = ["false"]
     for i in range(len(ring) - 1):
         x1, y1 = float(ring[i][0]), float(ring[i][1])
         x2, y2 = float(ring[i + 1][0]), float(ring[i + 1][1])
         if y1 == y2:
             continue  # crossing condition (y1>lat) != (y2>lat) is constant-false
-        cond = (F.lit(y1) > lat) != (F.lit(y2) > lat)
-        xcross = F.lit(x2 - x1) * (lat - F.lit(y1)) / F.lit(y2 - y1) + F.lit(x1)
-        inside = inside != (cond & (lon < xcross))
-    return inside
+        cond = f"(({dlit(y1)} > lat) != ({dlit(y2)} > lat))"
+        xcross = f"((({dlit(x2 - x1)} * (lat - {dlit(y1)})) / {dlit(y2 - y1)}) + {dlit(x1)})"
+        terms.append(f"({cond} AND (lon < {xcross}))")
+    return F.expr(" != ".join(terms))
 
 
 def polygon_mask(df: DataFrame, ring: Ring, method: str = "native") -> DataFrame:

@@ -210,27 +210,24 @@ def load_coords(spark: SparkSession, register: bool = True) -> DataFrame:
     return df
 
 
-def datasets_catalog(spark: SparkSession) -> DataFrame:
-    """Dataset registry (SURVEY §1.2): per dataset — spatial boundary,
-    variable dictionary, temporal extent. The relational form of the
-    UI's ``Dataset(id, boundary, ..., headerAttributes)`` entries
+def datasets_catalog(grid: DataFrame) -> DataFrame:
+    """Dataset registry (SURVEY §1.2): per dataset of ``grid`` —
+    spatial boundary, cell count (distinct ``(y, x)``), variable
+    dictionary, temporal extent. The relational form of the UI's
+    ``Dataset(id, boundary, ..., headerAttributes)`` entries
     (reference map.jsx:15-23, 35-44) and of ``/getBoundary``
-    (main.py:93-96) — computed from the data instead of hardcoded.
+    (main.py:93-96) — computed from the cube itself instead of
+    hardcoded, so it describes whichever cube is served.
     """
     from pyspark.sql import functions as F
 
-    coords = load_coords(spark, register=False)
-    grid = load_grid(spark, register=False)
-    bbox = coords.groupBy("ds").agg(
+    return grid.groupBy("ds").agg(
         F.min("lat").alias("lat_min"),
         F.max("lat").alias("lat_max"),
         F.min("lon").alias("lon_min"),
         F.max("lon").alias("lon_max"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
-    meta = grid.groupBy("ds").agg(
+        F.count_distinct("y", "x").alias("n_cells"),
         F.sort_array(F.collect_set("variable")).alias("variables"),
         F.min("time").alias("time_min"),
         F.max("time").alias("time_max"),
     )
-    return bbox.join(meta, "ds")

@@ -158,6 +158,21 @@ def _manifest_epochs(spark: SparkSession, out_dir: str) -> list[int]:
     return sorted(epochs)
 
 
+def _is_file_not_found(java_exc) -> bool:
+    """True when the JVM exception's class is
+    ``java.io.FileNotFoundException`` or a subclass of it (walks
+    ``getSuperclass()``); False if the class cannot be inspected."""
+    try:
+        cls = java_exc.getClass()
+        while cls is not None:
+            if cls.getName() == "java.io.FileNotFoundException":
+                return True
+            cls = cls.getSuperclass()
+    except Exception:
+        pass
+    return False
+
+
 def _read_manifest(spark: SparkSession, out_dir: str) -> dict | None:
     """The LIVE manifest = the max committed epoch (epoch-named
     files, so a reader racing a compaction always sees either the old
@@ -191,13 +206,11 @@ def _read_manifest(spark: SparkSession, out_dir: str) -> dict | None:
             # the whole chained stack trace, where an unrelated
             # failure can MENTION FileNotFoundException); fall back to
             # the substring match only when no java_exception exists.
+            # Subclasses count: a FileSystem may throw its own
+            # FileNotFoundException subtype for the same race.
             java_exc = getattr(e, "java_exception", None)
             if java_exc is not None:
-                try:
-                    cls = java_exc.getClass().getName()
-                except Exception:
-                    cls = ""
-                if cls != "java.io.FileNotFoundException":
+                if not _is_file_not_found(java_exc):
                     raise
             elif "FileNotFoundException" not in str(e):
                 raise

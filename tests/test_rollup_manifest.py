@@ -230,3 +230,59 @@ def test_reader_raises_after_three_reap_races(spark, events, tmp_path, monkeypat
     monkeypatch.setattr(rm, "_manifest_epochs", lambda s, d: [999])
     with pytest.raises(Exception):
         rm._read_manifest(spark, out)
+
+
+class _JClass:
+    """Stub of a py4j ``java.lang.Class`` handle: name + superclass."""
+
+    def __init__(self, name, parent=None):
+        self.name, self.parent = name, parent
+
+    def getName(self):
+        return self.name
+
+    def getSuperclass(self):
+        return self.parent
+
+
+class _JavaError(Exception):
+    """Stub of a py4j-wrapped JVM error (carries ``java_exception``)."""
+
+    def __init__(self, cls):
+        super().__init__(cls.name)
+        self.java_exception = type("JExc", (), {"getClass": lambda _self: cls})()
+
+
+_IO = _JClass("java.io.IOException", _JClass("java.lang.Exception", _JClass("java.lang.Object")))
+_FNF = _JClass("java.io.FileNotFoundException", _IO)
+
+
+@pytest.mark.parametrize(
+    "cls,retried",
+    [
+        (_JClass("org.example.fs.SubFileNotFoundException", _FNF), True),
+        (_JClass("java.nio.file.AccessDeniedException", _JClass("java.nio.file.FileSystemException", _IO)), False),
+    ],
+    ids=["fnf-subclass", "unrelated"],
+)
+def test_reader_retry_follows_java_class_chain(monkeypatch, cls, retried):
+    """Only the list→reap race is retried: a FileNotFoundException
+    SUBCLASS (found by walking getSuperclass) retries until the
+    3-attempt cap; any other JVM error surfaces on the first open."""
+    opens = []
+
+    class _FS:
+        def open(self, path):
+            opens.append(path)
+            raise _JavaError(cls)
+
+    monkeypatch.setattr(rm, "_manifest_epochs", lambda s, d: [1])
+    monkeypatch.setattr(rm, "_fs_for", lambda s, d: (_FS(), lambda *parts: parts))
+    if retried:
+        with pytest.raises(RuntimeError, match="after 3"):
+            rm._read_manifest(None, "store")
+        assert len(opens) == 3
+    else:
+        with pytest.raises(_JavaError):
+            rm._read_manifest(None, "store")
+        assert len(opens) == 1

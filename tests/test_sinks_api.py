@@ -163,7 +163,7 @@ def test_render_global_vs_slice_breaks(spark, query, tmp_path):
 def test_datasets_catalog(spark):
     from netcdf_olap_spark.session import datasets_catalog
 
-    cat = datasets_catalog(spark).collect()
+    cat = datasets_catalog(load_grid(spark, register=False)).collect()
     assert len(cat) == 1
     row = cat[0]
     assert row["ds"] == "five_lakes"
@@ -276,3 +276,138 @@ def test_api_leaflet_client_payload_shape(spark):
         with zipfile.ZipFile(io.BytesIO(r.data)) as z:
             names = z.namelist()
             assert len(names) == 2 and all(n.endswith(check) for n in names), names
+
+
+def _in_memory_scans(plan):
+    """Every InMemoryTableScan node of an executed plan (AQE-unwrapped)."""
+    out = [plan] if plan.nodeName() == "InMemoryTableScan" else []
+    if plan.nodeName().startswith("AdaptiveSparkPlan"):
+        out += _in_memory_scans(plan.executedPlan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _in_memory_scans(kids.apply(i))
+    return out
+
+
+def test_served_grid_prunes_cached_batches(spark):
+    """A 1-day, 1-variable slice of the app's served grid reads only
+    the cached batches whose min/max can hold it: at most two
+    10,000-row batches of the 92,160-row fixture cube."""
+    from netcdf_olap_spark.api import create_app
+
+    grid = create_app(spark).extensions["served_grid"]
+    assert grid.count() == 92_160
+    q = CubeQuery(start_date="1990-01-05", end_date="1990-01-05", variables=["avg_night_temp"])
+    sliced = q.apply(grid)
+    assert len(sliced.collect()) == 32 * 32
+    scans = _in_memory_scans(sliced._jdf.queryExecution().executedPlan())
+    assert len(scans) == 1
+    assert 0 < scans[0].metrics().apply("numOutputRows").value() <= 20_000
+
+
+def test_served_grid_leaves_plain_grid_plans_alone(spark):
+    """Once the served grid is cached and a request has run, a plain
+    load_grid() plan still scans Parquet with its pushed filters: the
+    cache is never substituted into queries outside the app."""
+    from netcdf_olap_spark.api import create_app
+    from netcdf_olap_spark.operators.slice import time_range
+
+    client = create_app(spark).test_client()
+    payload = {"selectDate": "1990-01-05,1990-01-06", "variables": ["avg_night_temp"]}
+    r = client.post("/fetchResult", data=json.dumps(payload), content_type="application/json")
+    assert r.status_code == 200
+    plan = time_range(load_grid(spark, register=False), "1990-01-05", "1990-01-06")._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan and "PushedFilters: [" in plan
+    assert "InMemoryTableScan" not in plan
+
+
+@pytest.mark.parametrize("fmt", ["png", "nc", "nc4"])
+def test_served_grid_artifacts_equal_parquet_path(spark, query, tmp_path, fmt):
+    """The served grid changes where rows are read from, not what is
+    written: every artifact's sha256 equals the one built from a plain
+    Parquet read of the cube."""
+    from netcdf_olap_spark.api import create_app
+    from netcdf_olap_spark.sinks.netcdf import export_netcdf_files
+
+    served = create_app(spark).extensions["served_grid"]
+
+    def digests(grid, out):
+        sliced = query.apply(grid)
+        if fmt == "png":
+            manifest = render_png_files(sliced, str(out), query.start_date, query.end_date)
+        else:
+            nc_fmt, gzip = ("classic", None) if fmt == "nc" else ("hdf5", 6)
+            manifest = export_netcdf_files(sliced, str(out), fmt=nc_fmt, gzip=gzip)
+        return {Path(r.path).name: r.sha256 for r in manifest.collect()}
+
+    want = digests(load_grid(spark, register=False), tmp_path / "parquet")
+    assert len(want) == len(query.variables)
+    assert digests(served, tmp_path / "served") == want
+
+
+def _polygon_payload(coords) -> str:
+    """A /fetchResult body as JSON text (NaN/Infinity kept as the
+    tokens Python's JSON parser accepts)."""
+    return json.dumps(
+        {
+            "selectDate": "1990-01-05,1990-01-12",
+            "variables": ["LST_LWST_avg_daily"],
+            "geoJson": {"type": "Polygon", "coordinates": [coords]},
+        }
+    )
+
+
+@pytest.mark.parametrize(
+    "coords,why",
+    [
+        ([[-83.6, 42.3], [float("nan"), 42.45], [-83.3, 43.3], [-83.6, 42.3]], "finite"),
+        ([[-83.6, 42.3], [float("inf"), 42.45], [-83.3, 43.3], [-83.6, 42.3]], "finite"),
+        ([[-83.6, 42.3], [-82.9, 42.45]], "at least 4 positions"),
+    ],
+    ids=["nan-vertex", "infinite-vertex", "two-point-ring"],
+)
+def test_api_rejects_degenerate_polygon(spark, coords, why):
+    from netcdf_olap_spark.api import create_app
+
+    client = create_app(spark).test_client()
+    r = client.post("/fetchResult", data=_polygon_payload(coords), content_type="application/json")
+    assert r.status_code == 400
+    msg = r.get_json()["message"]
+    assert msg.startswith("bad request") and why in msg
+
+
+def test_api_describes_the_served_cube(spark, tmp_path, monkeypatch):
+    """/getBoundary and /datasets describe the cube the app serves (here
+    a 3x4-cell cube shifted away from the fixture's extent), not the
+    fixture coordinates table."""
+    from pyspark.sql import functions as F
+
+    from netcdf_olap_spark.api import create_app
+
+    cube = str(tmp_path / "cube.parquet")
+    (
+        load_grid(spark, register=False)
+        .where((F.col("y") < 3) & (F.col("x") < 4) & (F.col("time") < F.lit("1990-01-03")))
+        .withColumn("lat", F.col("lat") - 10.0)
+        .withColumn("lon", F.col("lon") + 20.0)
+        .write.parquet(cube)
+    )
+    rows = spark.read.parquet(cube).select("lat", "lon").collect()
+    want = {
+        "lat_min": min(r.lat for r in rows),
+        "lat_max": max(r.lat for r in rows),
+        "lon_min": min(r.lon for r in rows),
+        "lon_max": max(r.lon for r in rows),
+    }
+    assert want["lat_max"] < 34 and want["lon_min"] > -65  # outside the fixture's extent
+    monkeypatch.setenv("SPARK_GRAFT_GRID_PATH", cube)
+    app = create_app(spark)
+    try:
+        client = app.test_client()
+        assert client.get("/getBoundary").get_json() == want
+        (d,) = client.get("/datasets").get_json()
+        assert {k: d[k] for k in want} == want
+        assert d["n_cells"] == 12
+        assert d["time_max"].startswith("1990-01-02")
+    finally:
+        app.extensions["served_grid"].unpersist()

@@ -98,14 +98,24 @@ def test_fill_value_nulls_skipped(spark):
     assert row.avg is not None
 
 
+# Constants whose repr is exponent-form (``1e-05``, ``1.5e+20``, and
+# the ~1e-05 x-offset of the near-vertical edge) reach the SQL-string
+# predicate as exponent literals.
+EXP_RING = [(-83.5, 1e-05), (1.5e20, 42.8), (-83.00001, 43.3), (-83.0, 42.6), (-83.5, 1e-05)]
+
+
 def test_native_expr_equals_pandas_udf_raycast(spark):
     """The unrolled JVM expression and the Arrow UDF must agree on
     every grid cell (same float64 arithmetic, same edge order)."""
     coords = load_coords(spark, register=False)
-    diff = coords.select(
-        (spatial.in_polygon_expr(POLYGON) != spatial.in_polygon_col(POLYGON)).alias("d")
-    ).where("d").count()
-    assert diff == 0
+    n = coords.count()
+    for ring in (POLYGON, EXP_RING):
+        row = coords.select(
+            (spatial.in_polygon_expr(ring) != spatial.in_polygon_col(ring)).alias("d"),
+            spatial.in_polygon_expr(ring).alias("inside"),
+        ).agg(F.sum(F.col("d").cast("int")).alias("diff"), F.sum(F.col("inside").cast("int")).alias("n_in")).collect()[0]
+        assert row.diff == 0, ring
+        assert 0 < row.n_in < n, ring  # the ring splits the grid
 
 
 def test_blocked_nearest_matches_brute_force(spark):
