@@ -37,56 +37,10 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
 
 
-# r15 measured choice (guide §4), decided by a three-way interleaved
-# min-of-reps A/B (JVM / full-Arrow / Arrow-bucket-only at sf0.1):
-# - ARROW_BUCKETING=True — the per-VECTOR bucket-bits + norm pass
-#   crosses to numpy once per vector (n_planes sequential-fold dots +
-#   one self-fold ≈ 450 interpreted lambda evals per row otherwise):
-#   emb_knn_graph 1.85→1.61 s, emb_delta_knn 1.21→0.87 s.
-# - ARROW_PAIR_SCORING=False — scoring per PAIR in Python ships both
-#   64-float vectors across Arrow for every bucket-mate pair and
-#   LOSES to the JVM fold everywhere it was tried (knn_graph
-#   1.85→2.35, doc_embedding_near_dup 1.47→2.09): the boundary cost
-#   scales with pairs × vector bytes, the win only with pairs.
-# Both paths are bitwise-identical to the JVM expressions (sequential
-# per-dimension numpy folds — the mmr_rerank precedent; equivalence
-# re-proven row-for-row at sf0.1 and by DuckDB parity).  The A/B
-# harness toggles these; production keeps the measured winners.
-ARROW_PAIR_SCORING = False
-ARROW_BUCKETING = True
-
-
-def _pair_cos_arrow_udf():
-    """Arrow-batched twin of ``_pair_cos`` (guide §4: the per-pair
-    cosine fold was the single hottest interpreted-HOF site — one
-    zip_with+aggregate per PAIR).  Batches of (v1, v2, n1, n2) cross
-    the boundary as Arrow; the fold runs vectorized in numpy as a
-    SEQUENTIAL per-dimension multiply-add (left-to-right — NOT
-    einsum/BLAS, whose pairwise summation rounds differently in the
-    last ulp), which per row is the exact IEEE operation sequence of
-    the JVM zip_with+aggregate fold and the DuckDB list_sum fold (the
-    mmr_rerank precedent); the zero-norm guard reproduces
-    ``when(denom == 0.0, 0.0)`` exactly (±0.0 compares equal to 0.0
-    in IEEE, matching numpy's ``denom != 0.0`` mask).
-
-    The closure is SELF-CONTAINED (driver-sim rule: a module-level
-    helper reference would pickle by reference to this package, which
-    is not importable on the external driver's workers)."""
-
-    @F.pandas_udf("double")
-    def _pc(v1: pd.Series, v2: pd.Series, n1: pd.Series, n2: pd.Series) -> pd.Series:
-        if len(v1) == 0:
-            return pd.Series(np.zeros(0, dtype=np.float64))
-        a = np.stack(v1.to_numpy()).astype(np.float64)
-        b = np.stack(v2.to_numpy()).astype(np.float64)
-        dot = np.zeros(a.shape[0], dtype=np.float64)
-        for d in range(a.shape[1]):  # sequential per-dimension fold
-            dot = dot + a[:, d] * b[:, d]
-        denom = n1.to_numpy(dtype=np.float64) * n2.to_numpy(dtype=np.float64)
-        out = np.divide(dot, denom, out=np.zeros_like(dot), where=denom != 0.0)
-        return pd.Series(out)
-
-    return _pc
+# Bucket bits + norms run Arrow-batched in numpy, pair scoring in the JVM
+# (r15 interleaved min-of-reps at sf0.1: Arrow bucketing took emb_knn_graph
+# 1.85→1.61 s and emb_delta_knn 1.21→0.87 s; Arrow pair scoring LOST,
+# knn_graph 1.85→2.35 s, doc_embedding_near_dup 1.47→2.09 s).
 
 
 def _bucket_nrm_arrow_udf(planes: "np.ndarray"):
@@ -98,7 +52,12 @@ def _bucket_nrm_arrow_udf(planes: "np.ndarray"):
     correctly rounded on every engine).  The plane matrix rides in
     the closure (query-scale metadata: n_planes×dim floats), and the
     fold is INLINED so the closure is self-contained (driver-sim
-    rule: no references to this package's module-level helpers)."""
+    rule: no references to this package's module-level helpers).
+
+    Precondition: finite vector elements.  A NaN makes the dot NaN,
+    and numpy's ``NaN >= 0.0`` is False (bit 0) while Spark's is True
+    (bit 1, NaN sorts above every double) — so this UDF and
+    ``lsh_bucket_col`` bucket a NaN-bearing vector differently."""
     pl = np.asarray(planes, dtype=np.float64)
 
     @F.pandas_udf("struct<bucket:int,nrm:double>")
@@ -313,37 +272,22 @@ def knn_graph_auto(
 
 
 def _bucketed_with_norms(
-    df: DataFrame, planes: np.ndarray, id_col: str, vec_col: str
+    df: DataFrame, planes: np.ndarray, id_col: str, vec_col: str, *keep: str
 ) -> DataFrame:
-    """(id, vec, bucket, nrm): norms precomputed ONCE per vector
+    """(id, vec, *keep, bucket, nrm): norms precomputed ONCE per vector
     (N folds, not N·E[bucket]) — the per-pair work downstream is then
     a single dot fold via _pair_cos, whose non-zero-norm branch is the
     same IEEE expression tree as cosine() (bitwise unchanged, oracles
     replay the inline-cosine form) and whose zero-vector branch scores
     0.0 exactly like cosine()."""
-    if ARROW_BUCKETING:
-        bn = _bucket_nrm_arrow_udf(planes)(F.col(vec_col)).alias("_bn")
-        return df.select(F.col(id_col), F.col(vec_col), bn).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("_bn.bucket").alias("bucket"),
-            F.col("_bn.nrm").alias("nrm"),
-        )
-    return df.select(
+    bn = _bucket_nrm_arrow_udf(planes)(F.col(vec_col)).alias("_bn")
+    return df.select(F.col(id_col), F.col(vec_col), *keep, bn).select(
         F.col(id_col),
         F.col(vec_col),
-        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-        _norm(F.col(vec_col)).alias("nrm"),
+        *keep,
+        F.col("_bn.bucket").alias("bucket"),
+        F.col("_bn.nrm").alias("nrm"),
     )
-
-
-def pair_cos_scored(v1: Column, v2: Column, n1: Column, n2: Column) -> Column:
-    """The pair-stage cosine: Arrow-batched numpy fold when
-    ARROW_PAIR_SCORING (bitwise-identical values — see
-    _pair_cos_arrow_udf), else the JVM expression tree."""
-    if ARROW_PAIR_SCORING:
-        return _pair_cos_arrow_udf()(v1, v2, n1, n2)
-    return _pair_cos(v1, v2, n1, n2)
 
 
 def graph_pair_candidates(b: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -358,7 +302,7 @@ def graph_pair_candidates(b: DataFrame, id_col: str = "vec_id", vec_col: str = "
     ).select(
         F.col(f"a.{id_col}").alias("src_id"),
         F.col(f"c.{id_col}").alias("dst_id"),
-        pair_cos_scored(
+        _pair_cos(
             F.col(f"a.{vec_col}"), F.col(f"c.{vec_col}"), F.col("a.nrm"), F.col("c.nrm")
         ).alias("cos_sim"),
     )
@@ -407,7 +351,7 @@ def delta_knn(
     pairs = bb.join(cb, F.col("a.bucket") == F.col("c.bucket")).select(
         F.col(f"a.{id_col}").alias("src_id"),
         F.col(f"c.{id_col}").alias("dst_id"),
-        pair_cos_scored(
+        _pair_cos(
             F.col(f"a.{vec_col}"), F.col(f"c.{vec_col}"), F.col("a.nrm"), F.col("c.nrm")
         ).alias("cos_sim"),
     )
@@ -445,23 +389,7 @@ def hard_negatives(
     top-k window.  Deterministic: md5-derived planes, sequential-fold
     dots, (cos DESC, dst) tie-break."""
     planes = md5_sign_planes(auto_n_planes(n_rows), dim)
-    if ARROW_BUCKETING:
-        bn = _bucket_nrm_arrow_udf(planes)(F.col(vec_col)).alias("_bn")
-        b = df.select(F.col(id_col), F.col(vec_col), F.col(label_col), bn).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col(label_col),
-            F.col("_bn.bucket").alias("bucket"),
-            F.col("_bn.nrm").alias("nrm"),
-        )
-    else:
-        b = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col(label_col),
-            lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-            _norm(F.col(vec_col)).alias("nrm"),
-        )
+    b = _bucketed_with_norms(df, planes, id_col, vec_col, label_col)
     a, c = b.alias("a"), b.alias("c")
     pairs = a.join(
         c,
@@ -470,7 +398,7 @@ def hard_negatives(
     ).select(
         F.col(f"a.{id_col}").alias("src_id"),
         F.col(f"c.{id_col}").alias("dst_id"),
-        pair_cos_scored(
+        _pair_cos(
             F.col(f"a.{vec_col}"), F.col(f"c.{vec_col}"), F.col("a.nrm"), F.col("c.nrm")
         ).alias("cos_sim"),
     )

@@ -462,10 +462,9 @@ def _near_dup_pairs(e: DataFrame) -> DataFrame:
             # _pair_cos semantics, not raw dot/(na*nb): a zero
             # vector's 0/0 NaN passes `NaN > 0.3` in Spark and would
             # near-dup-match it to every same-label row (r11 review
-            # finding).  pair_cos_scored = the measured pair-scoring
-            # path (JVM fold — the r15 A/B showed Arrow pair scoring
-            # loses here: 1.47→2.09 s; see ARROW_PAIR_SCORING).
-            similarity.pair_cos_scored(
+            # finding).  JVM fold: the r15 A/B measured Arrow pair
+            # scoring slower here (1.47→2.09 s).
+            similarity._pair_cos(
                 F.col("a.embedding"), F.col("b.embedding"), F.col("a.nrm"), F.col("b.nrm")
             ).alias("cos_sim"),
         )

@@ -584,7 +584,7 @@ ORDER BY source, h
 def stream_zarr_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CUBE ingestion from a Zarr store: the chunk-arrival
     stream (``readStream.format("zarr_cube")`` —
-    sources/zarr_datasource.py, offsets = the chunk-object set)
+    sources/zarr.py, offsets = the chunk-object set)
     drained through a complete-mode per-variable aggregation.  The
     micro-batch boundaries are whatever the source picked; counts
     and the decimal sum are batching-invariant, so the drained sink
@@ -594,7 +594,7 @@ def stream_zarr_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from netcdf_olap_spark.queries.grid import _zarr_fixture_dir
-    from netcdf_olap_spark.sources.zarr_datasource import register
+    from netcdf_olap_spark.sources.zarr import register
 
     register(spark)
     stream = (

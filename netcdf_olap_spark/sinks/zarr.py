@@ -19,7 +19,6 @@ guarded).
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 
 import numpy as np
@@ -33,8 +32,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from netcdf_olap_spark.sources import zarr as zarr_src
 from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
+from netcdf_olap_spark.sources.zarr import (
+    encode_chunk,
+    write_zarr_array,
+    write_zarr_group,
+    write_zarray,
+)
 
 ZARR_MANIFEST_SCHEMA = StructType(
     [
@@ -112,26 +116,15 @@ def export_zarr_store(
         raise ValueError("time values are not hour-aligned; cannot encode hours-since-1990")
     hours = np.array([s // 3600 for s in secs], dtype="<i4")
 
-    zarr_src.write_zarr_group(root)
-    zarr_src.write_zarr_array(os.path.join(root, "time"), hours, compressor=None)
-    zarr_src.write_zarr_array(os.path.join(root, "lat"), lat2d.astype("<f8"), compressor=None)
-    zarr_src.write_zarr_array(os.path.join(root, "lon"), lon2d.astype("<f8"), compressor=None)
+    write_zarr_group(root)
+    write_zarr_array(os.path.join(root, "time"), hours, compressor=None)
+    write_zarr_array(os.path.join(root, "lat"), lat2d.astype("<f8"), compressor=None)
+    write_zarr_array(os.path.join(root, "lon"), lon2d.astype("<f8"), compressor=None)
     chunks = (min(time_chunk, nt), ny, nx)
-    for var in variables:
-        adir = os.path.join(root, var)
-        os.makedirs(adir, exist_ok=True)
-        meta = {
-            "zarr_format": 2,
-            "shape": [nt, ny, nx],
-            "chunks": list(chunks),
-            "dtype": "<f8",
-            "compressor": {"id": "zlib", "level": 6} if compressor == "zlib" else None,
-            "fill_value": fill_value,
-            "order": "C",
-            "filters": None,
-        }
-        with open(os.path.join(adir, ".zarray"), "w") as fh:
-            json.dump(meta, fh, sort_keys=True, indent=1)
+    for var in variables:  # every data variable has the same array spec
+        spec_ = write_zarray(
+            os.path.join(root, var), (nt, ny, nx), chunks, "<f8", compressor, fill_value
+        )
 
     # broadcastable index dims: time → slab/offset; y/x → positions
     t_idx = spark.createDataFrame(
@@ -147,20 +140,19 @@ def export_zarr_store(
         .select("variable", "_slab", "_toff", "_yi", "_xi", "value")
     )
 
-    root_, chunks_, fill_, comp_, nt_ = root, chunks, float(fill_value), compressor, nt
+    root_, chunks_, fill_ = root, chunks, float(fill_value)
 
     def _write(pdf):
         import hashlib as _hashlib
         import os as _os
         import tempfile as _tempfile
-        import zlib as _zlib
 
         import numpy as _np
         import pandas as _pd
 
         var = pdf["variable"].iloc[0]
         slab = int(pdf["_slab"].iloc[0])
-        block = _np.full(chunks_, fill_, dtype="<f8")  # spec: full-size edge chunks
+        block = _np.full(chunks_, fill_, dtype="<f8")
         vals = pdf["value"].to_numpy(dtype="<f8")
         vals = _np.where(_np.isnan(vals), fill_, vals)
         block[
@@ -168,9 +160,7 @@ def export_zarr_store(
             pdf["_yi"].to_numpy(_np.int64),
             pdf["_xi"].to_numpy(_np.int64),
         ] = vals
-        buf = block.tobytes()
-        if comp_ == "zlib":
-            buf = _zlib.compress(buf, 6)
+        buf = encode_chunk(spec_, block)
         name = f"{slab}.0.0"
         adir = _os.path.join(root_, var)
         fd, tmp = _tempfile.mkstemp(dir=adir)

@@ -34,6 +34,9 @@ distributed plumbing).
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import threading
+import weakref
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -51,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from netcdf_olap_spark.operators.slice import _day_bounds
 
 EPOCH_1990 = dt.datetime(1990, 1, 1, 0, 0)
 
@@ -391,11 +396,21 @@ def hdf5_decoder(content: bytes, ds: str, variables: list[str] | None = None) ->
     yield from _decode_vendored(read_hdf5(content, variables), ds, variables)
 
 
+def netcdf_format(content: bytes) -> str:
+    """Magic-byte sniff, mirroring how NetCDF-Java picks an IOSP for
+    the reference: ``\\x89HDF`` → ``"hdf5"`` (NetCDF-4), ``CDF`` →
+    ``"classic"`` (CDF-1/CDF-2), anything else → ``"unknown"``."""
+    from netcdf_olap_spark.sources.hdf5 import is_hdf5
+
+    if is_hdf5(content):
+        return "hdf5"
+    return "classic" if content[:3] == b"CDF" else "unknown"
+
+
 def auto_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
-    """Magic-byte dispatch over the vendored readers, mirroring how
-    NetCDF-Java picks an IOSP for the reference: ``\\x89HDF`` →
-    NetCDF-4/HDF5, ``CDF`` → classic. One .nc directory may mix both."""
-    if content[:8] == b"\x89HDF\r\n\x1a\n":
+    """Dispatch over the vendored readers by ``netcdf_format``; one
+    .nc directory may mix both formats."""
+    if netcdf_format(content) == "hdf5":
         yield from hdf5_decoder(content, ds, variables)
     else:
         yield from netcdf3_decoder(content, ds, variables)
@@ -436,20 +451,16 @@ def npz_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> 
             yield cube_to_pandas(ds, name, data, time_hours, lat, lon, fill)
 
 
-def ensure_package_on_workers(spark: SparkSession) -> None:
-    """Make ``netcdf_olap_spark`` importable on Python workers
-    regardless of the driver's cwd/sys.path.
+_PKG_LOCK = threading.Lock()
+_PKG_SHIPPED: "weakref.WeakSet" = weakref.WeakSet()  # SparkContexts holding the zip
 
-    The ingest decoders are module-level functions, so cloudpickle
-    serializes them BY REFERENCE — a worker that can't import the
-    package dies with ModuleNotFoundError when the driver was launched
-    outside the repo (an external harness, a notebook, spark-submit
-    from elsewhere). Shipping the package once per session via
-    ``addPyFile`` fixes the whole class; the zip is named by a content
-    hash of the sources so a stale /tmp copy from an older version can
-    never shadow current code, and re-adding the identical file is a
-    no-op. On a real cluster this is exactly how the package would
-    reach executors (``--py-files``)."""
+
+@functools.cache
+def _package_zip() -> str:
+    """The package sources as a zip named by their content hash, built
+    once per process (hashing costs ~10 ms a call, ~0.3 s cold).  A
+    stale /tmp copy from an older version can never shadow current
+    code, and the fixed timestamps give identical bytes per hash."""
     import hashlib
     import os
     import tempfile
@@ -476,12 +487,36 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
         os.close(fd)
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
             for rel, full in files:
-                # fixed timestamp → deterministic bytes for a given hash name
                 with open(full, "rb") as fh:
                     info = zipfile.ZipInfo(rel, date_time=(1990, 1, 1, 0, 0, 0))
                     zf.writestr(info, fh.read())
         os.replace(tmp, dst)
-    spark.sparkContext.addPyFile(dst)
+    return dst
+
+
+def ensure_package_on_workers(spark: SparkSession) -> None:
+    """Make ``netcdf_olap_spark`` importable on Python workers
+    regardless of the driver's cwd/sys.path.
+
+    The ingest decoders are module-level functions, so cloudpickle
+    serializes them BY REFERENCE — a worker that can't import the
+    package dies with ModuleNotFoundError when the driver was launched
+    outside the repo (an external harness, a notebook, spark-submit
+    from elsewhere). ``addPyFile`` ships the package zip; on a real
+    cluster this is exactly how the package would reach executors
+    (``--py-files``).
+
+    Called per API request and per ingest, possibly from concurrent
+    threads: the zip is added ONCE per SparkContext, under a lock.
+    Each ``addPyFile`` grows ``sys.path`` and ``_python_includes`` and
+    runs ``importlib.invalidate_caches()``, which is not safe against
+    a concurrent call; a new SparkContext (after ``spark.stop()``)
+    gets the zip again."""
+    sc = spark.sparkContext
+    with _PKG_LOCK:
+        if sc not in _PKG_SHIPPED:
+            sc.addPyFile(_package_zip())
+            _PKG_SHIPPED.add(sc)
 
 
 def runtime_hadoop_version(default: str = "3.3.4") -> str:
@@ -595,19 +630,14 @@ def scan_directory_health(spark: SparkSession, path: str, pattern: str = "*.nc")
         import numpy as _np
         import pandas as _pd
 
-        from netcdf_olap_spark.sources.hdf5 import is_hdf5, read_hdf5
+        from netcdf_olap_spark.sources.hdf5 import read_hdf5
         from netcdf_olap_spark.sources.netcdf3 import read_netcdf3
 
         for pdf in batches:
             rows = []
             for p, content in zip(pdf["path"], pdf["content"]):
                 content = bytes(content)
-                if is_hdf5(content):
-                    fmt = "hdf5"
-                elif content[:3] == b"CDF":
-                    fmt = "classic"
-                else:
-                    fmt = "unknown"
+                fmt = netcdf_format(content)
                 try:
                     if fmt == "hdf5":
                         f = read_hdf5(content)
@@ -725,6 +755,5 @@ def overlapping_variables(catalog: DataFrame, start_date: str, end_date: str) ->
     closed-interval test ``fileStart <= reqEnd && fileEnd >= reqStart``
     (Gddp.scala:132-133) with the same inclusive day bounds as
     operators/slice.py (start@00:00, end@23:59 → < end+1d)."""
-    lo = F.to_timestamp(F.lit(start_date))
-    hi = F.to_timestamp(F.date_add(F.to_date(F.lit(end_date)), 1))
+    lo, hi = _day_bounds(start_date, end_date)
     return catalog.where((F.col("time_min") < hi) & (F.col("time_max") >= lo))

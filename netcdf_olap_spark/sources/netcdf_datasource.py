@@ -44,7 +44,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from netcdf_olap_spark.sources.netcdf import GRID_SCHEMA
+from netcdf_olap_spark.sources.netcdf import GRID_SCHEMA, netcdf_format
 
 
 class CubeFilePartition(InputPartition):
@@ -106,14 +106,14 @@ def _list_variables(path: str, decoder: str) -> list[str]:
         finally:
             nc.close()
     if decoder in ("nc3", "hdf5", "auto"):
-        from netcdf_olap_spark.sources.hdf5 import is_hdf5, read_hdf5
+        from netcdf_olap_spark.sources.hdf5 import read_hdf5
         from netcdf_olap_spark.sources.netcdf3 import read_netcdf3
 
         # data arrays are zero-copy frombuffer views, so this costs one
         # file read; at real scale, probe a header-only byte range
         with open(path, "rb") as fh:
             content = fh.read()
-        if decoder == "hdf5" or (decoder == "auto" and is_hdf5(content)):
+        if decoder == "hdf5" or (decoder == "auto" and netcdf_format(content) == "hdf5"):
             ncf = read_hdf5(content)
         else:
             ncf = read_netcdf3(content)

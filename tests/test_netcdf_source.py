@@ -237,6 +237,51 @@ def test_ingest_directory_accepts_filesystem_uri(spark, tmp_path):
     assert a == b
 
 
+def test_package_shipped_once_per_context_from_threads(spark):
+    """Concurrent API requests all call ensure_package_on_workers:
+    from 8 threads at once, addPyFile must run once per SparkContext
+    (each call grows sys.path and invalidates import caches, which is
+    not thread-safe), and the real context must list the zip once."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    class _Context:
+        def __init__(self):
+            self.added = []
+
+        def addPyFile(self, path):
+            time.sleep(0.01)  # widen the window a check-then-add race needs
+            self.added.append(path)
+
+    class _Session:
+        def __init__(self, sc):
+            self.sparkContext = sc
+
+    def hammer(session):
+        gate = threading.Barrier(8)
+
+        def call(_):
+            gate.wait(timeout=30)
+            src.ensure_package_on_workers(session)
+
+        with ThreadPoolExecutor(8) as pool:
+            list(pool.map(call, range(8), timeout=60))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        stub = _Context()
+        hammer(_Session(stub))
+        hammer(spark)
+    finally:
+        sys.setswitchinterval(switch)
+    assert stub.added == [src._package_zip()]
+    includes = spark.sparkContext._python_includes
+    assert includes.count(os.path.basename(src._package_zip())) == 1
+
+
 def test_decode_resolves_coords_via_dimension_scales():
     """A netCDF-4 file whose coordinate variables have NO conventional
     names and NO long_name attributes still ingests: the decoder falls

@@ -3,6 +3,7 @@ sanity, aggregate-sketch accuracy (SURVEY.md §5.5)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -178,6 +179,24 @@ def test_lsh_bucket_prunes(spark):
     counts = bucketed.groupBy("b").count().collect()
     assert len(counts) > 10  # spread across many buckets
     assert max(c["count"] for c in counts) < e.count()
+
+
+def test_arrow_and_jvm_bucketing_disagree_on_nan(spark):
+    """Pins the finite-input precondition of _bucket_nrm_arrow_udf:
+    the dot of a NaN-bearing vector is NaN, numpy's NaN >= 0 is False
+    (bit 0) and Spark's is True (bit 1); finite vectors agree."""
+    planes = np.array([[1.0, 1.0]])
+    df = spark.createDataFrame(
+        [(0, [float("nan"), 1.0]), (1, [2.0, -1.0]), (2, [-2.0, 1.0])],
+        "id int, v array<double>",
+    )
+    arrow = similarity._bucket_nrm_arrow_udf(planes)(F.col("v")).bucket
+    jvm = similarity.lsh_bucket_col(F.col("v"), planes)
+    got = {
+        r["id"]: (r["arrow"], r["jvm"])
+        for r in df.select("id", arrow.alias("arrow"), jvm.alias("jvm")).collect()
+    }
+    assert got == {0: (0, 1), 1: (1, 1), 2: (0, 0)}
 
 
 def test_centroid_norms_reasonable(spark):

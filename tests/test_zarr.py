@@ -185,7 +185,7 @@ def _mini_store(root, nt=4):
 def test_zarr_datasource_matches_ingest(spark, tmp_path):
     """format('zarr_cube') == ingest_zarr_store row for row, and the
     variables option prunes partitions at planning time."""
-    from netcdf_olap_spark.sources.zarr_datasource import ZarrCubeReader, register
+    from netcdf_olap_spark.sources.zarr import ZarrCubeReader, register
 
     root = str(tmp_path / "store")
     _mini_store(root)
@@ -215,7 +215,7 @@ def test_zarr_stream_ingests_arriving_chunks(spark, tmp_path):
 
     import numpy as np
 
-    from netcdf_olap_spark.sources.zarr_datasource import register
+    from netcdf_olap_spark.sources.zarr import register
 
     root = str(tmp_path / "store")
     cube = _mini_store(root, nt=4)
@@ -267,7 +267,7 @@ def test_absent_chunk_ingests_as_fill_rows(spark, tmp_path):
     write_empty_chunks=False) — BOTH distributed paths must emit its
     cells as NULL rows, matching the driver-side reader, instead of
     silently dropping them (review finding)."""
-    from netcdf_olap_spark.sources.zarr_datasource import register
+    from netcdf_olap_spark.sources.zarr import register
 
     root = str(tmp_path / "store")
     _mini_store(root)
@@ -300,7 +300,7 @@ def test_stream_defers_chunk_until_shape_bump(spark, tmp_path):
 
     import numpy as np
 
-    from netcdf_olap_spark.sources.zarr_datasource import register
+    from netcdf_olap_spark.sources.zarr import register
 
     root = str(tmp_path / "store")
     cube = _mini_store(root, nt=4)
@@ -344,3 +344,64 @@ def test_stream_defers_chunk_until_shape_bump(spark, tmp_path):
         assert out.select(F.countDistinct("time")).first()[0] == 6
     finally:
         q.stop()
+
+
+def _break_missing_lat(root):
+    import shutil
+
+    shutil.rmtree(os.path.join(root, "lat"))
+
+
+def _break_2d_coord_shapes(root):
+    zr.write_zarr_array(os.path.join(root, "lat"), np.full((2, 3), 1.0), compressor=None)
+    zr.write_zarr_array(os.path.join(root, "lon"), np.full((3, 2), -3.0), compressor=None)
+
+
+def _break_var_grid_shape(root):
+    zr.write_zarr_array(
+        os.path.join(root, "w"), np.zeros((4, 3, 2), dtype="<f8"), compressor=None
+    )
+
+
+@pytest.mark.parametrize(
+    "breakage, message",
+    [
+        (_break_missing_lat, "missing coordinate array: lat"),
+        (_break_2d_coord_shapes, "2-D lat/lon shapes differ"),
+        (_break_var_grid_shape, r"w: shape \[4, 3, 2\] != coord axes"),
+    ],
+    ids=["missing-lat", "2d-coord-shapes", "var-grid-shape"],
+)
+def test_invalid_store_rejected_by_both_batch_readers(spark, tmp_path, breakage, message):
+    """A store whose coordinates and data variables disagree raises
+    ValueError through ingest_zarr_store AND format('zarr_cube') —
+    one validation (read_store) behind both batch paths."""
+    from netcdf_olap_spark.sources.zarr import ZarrCubeReader, register
+
+    root = str(tmp_path / "store")
+    _mini_store(root)
+    breakage(root)
+    with pytest.raises(ValueError, match=message):
+        zr.ingest_zarr_store(spark, root, ds="t")
+    with pytest.raises(ValueError, match=message):
+        ZarrCubeReader({"path": root})
+    register(spark)
+    with pytest.raises(Exception, match=f"ValueError: .*{message}"):
+        spark.read.format("zarr_cube").options(path=root, ds="t").load().collect()
+
+
+def test_stream_reader_accepts_time_axis_ahead_of_shape(tmp_path):
+    """The stream reader may observe an extended time axis before a
+    variable's .zarray shape bump (the append race); the batch reader
+    rejects the same store."""
+    from netcdf_olap_spark.sources.zarr import ZarrCubeReader, ZarrCubeStreamReader
+
+    root = str(tmp_path / "store")
+    _mini_store(root, nt=4)
+    zr.write_zarr_array(
+        os.path.join(root, "time"), (np.arange(6) * 24).astype("<i4"), compressor=None
+    )
+    rd = ZarrCubeStreamReader({"path": root})._reader()
+    assert len(rd.time_us) == 6 and rd.metas["v"][1] == (4, 2, 3)
+    with pytest.raises(ValueError, match="coord axes"):
+        ZarrCubeReader({"path": root})
