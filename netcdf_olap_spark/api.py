@@ -26,10 +26,12 @@ would read every day. The cube is assumed static for the app's lifetime.
 
 from __future__ import annotations
 
+import datetime as dt
 import functools
 import io
 import json
 import os
+import re
 import tempfile
 import zipfile
 
@@ -39,6 +41,23 @@ from netcdf_olap_spark.operators.spatial import parse_geojson_polygon
 from netcdf_olap_spark.plans import CubeQuery
 from netcdf_olap_spark.session import datasets_catalog, get_spark, load_grid
 from netcdf_olap_spark.sinks import render_png_files
+
+
+# the lenient ``YYYY-M-D`` date Spark's casts accept, optionally
+# followed by a time of day
+_LENIENT_DATE = re.compile(r"\s*(\d{4})-(\d{1,2})-(\d{1,2})(?:[ T].*)?\s*")
+
+
+def _lenient_date(s: str) -> dt.date | None:
+    """The day of a ``YYYY-M-D`` date, or None for any other form (left
+    for the engine to accept or reject)."""
+    m = _LENIENT_DATE.fullmatch(s)
+    if not m:
+        return None
+    try:
+        return dt.date(*map(int, m.groups()))
+    except ValueError:
+        return None
 
 
 def parse_query_payload(payload: dict) -> CubeQuery:
@@ -51,6 +70,9 @@ def parse_query_payload(payload: dict) -> CubeQuery:
         parts = list(date or [])
     if len(parts) != 2 or not all(parts):
         raise ValueError("selectDate must be 'start,end' or [start, end]")
+    first, last = (_lenient_date(str(p)) for p in parts)
+    if first and last and first > last:
+        raise ValueError(f"selectDate starts after it ends: {parts[0]} > {parts[1]}")
     variables = payload.get("variables") or []
     if isinstance(variables, str):
         variables = [v for v in variables.split(",") if v]

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def connected_components(
@@ -200,7 +201,9 @@ def blocked_components(
         ids = sorted(parent)
         return pd.DataFrame({"id": ids, "comp": [find(x) for x in ids]})
 
-    return cols.groupBy("_blk").applyInPandas(_union_find, "id long, comp long")
+    return cols.groupBy("_blk").applyInPandas(
+        _union_find, StructType([StructField("id", LongType()), StructField("comp", LongType())])
+    )
 
 
 def dedup_clusters(

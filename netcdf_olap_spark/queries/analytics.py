@@ -814,7 +814,7 @@ def profile_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a bounded file listing here; at warehouse scale the same
     numbers come from one catalog lookup, or the footer pass
     distributes over a binaryFile listing of the manifest."""
-    from netcdf_olap_spark.sources.stats import parquet_column_stats
+    from netcdf_olap_spark.sources.stats import FOOTER_STATS_SCHEMA, parquet_column_stats
 
     n_rows, st = parquet_column_stats(
         os.path.join(sf_dir, "lineitem.parquet"), _FOOTER_COLS
@@ -832,9 +832,7 @@ def profile_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c in _FOOTER_COLS
     ]
-    return spark.createDataFrame(
-        rows, "column_name string, n_rows long, n_nulls long, min_val double, max_val double"
-    ).orderBy("column_name")
+    return spark.createDataFrame(rows, FOOTER_STATS_SCHEMA).orderBy("column_name")
 
 
 def profile_footer_stats_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:

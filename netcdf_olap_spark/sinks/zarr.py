@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
@@ -127,12 +128,15 @@ def export_zarr_store(
         )
 
     # broadcastable index dims: time → slab/offset; y/x → positions
+    def ints(*names):
+        return [StructField(n, IntegerType()) for n in names]
+
     t_idx = spark.createDataFrame(
         [(t, i // chunks[0], i % chunks[0]) for t, i in t_pos.items()],
-        "time timestamp, _slab int, _toff int",
+        StructType([StructField("time", TimestampType()), *ints("_slab", "_toff")]),
     )
-    y_idx = spark.createDataFrame(list(y_pos.items()), "y int, _yi int")
-    x_idx = spark.createDataFrame(list(x_pos.items()), "x int, _xi int")
+    y_idx = spark.createDataFrame(list(y_pos.items()), StructType(ints("y", "_yi")))
+    x_idx = spark.createDataFrame(list(x_pos.items()), StructType(ints("x", "_xi")))
     indexed = (
         df.join(F.broadcast(t_idx), "time")
         .join(F.broadcast(y_idx), "y")

@@ -511,7 +511,13 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     Each ``addPyFile`` grows ``sys.path`` and ``_python_includes`` and
     runs ``importlib.invalidate_caches()``, which is not safe against
     a concurrent call; a new SparkContext (after ``spark.stop()``)
-    gets the zip again."""
+    gets the zip again. Python workers also run
+    ``importlib.invalidate_caches()`` at the start of EVERY task; on
+    Python < 3.13 that re-reads each zip on their path unless the
+    worker runs ``worker_site/sitecustomize.py`` (``get_spark``
+    sessions do), which skips unchanged archives. The zip's
+    content-hash name means a changed package is a new archive with
+    a fresh importer, never a stale one."""
     sc = spark.sparkContext
     with _PKG_LOCK:
         if sc not in _PKG_SHIPPED:

@@ -22,6 +22,19 @@ import glob
 import os
 
 import pyarrow.parquet as pq
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+#: per-column footer figures, as both the driver-side and the
+#: distributed profile return them
+FOOTER_STATS_SCHEMA = StructType(
+    [
+        StructField("column_name", StringType()),
+        StructField("n_rows", LongType()),
+        StructField("n_nulls", LongType()),
+        StructField("min_val", DoubleType()),
+        StructField("max_val", DoubleType()),
+    ]
+)
 
 
 def _list_parquet(path: str) -> list[str]:
@@ -179,10 +192,7 @@ def parquet_column_stats_distributed(spark, path: str, columns: list[str]):
         .load(path)
         .select("path")  # column pruning keeps the scan metadata-only
     )
-    partials = listing.mapInPandas(
-        _parse_footers,
-        "column_name string, n_rows long, n_nulls long, min_val double, max_val double",
-    )
+    partials = listing.mapInPandas(_parse_footers, FOOTER_STATS_SCHEMA)
     return partials.groupBy("column_name").agg(
         F.sum("n_rows").cast("long").alias("n_rows"),
         F.sum("n_nulls").cast("long").alias("n_nulls"),

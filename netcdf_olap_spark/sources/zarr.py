@@ -406,9 +406,8 @@ def ingest_zarr_store(spark: SparkSession, root: str, ds: str) -> DataFrame:
             for var, key in zip(pdf["variable"], pdf["ck"]):
                 yield chunk_rows(ds, var, specs[var], _cidx(key), None, time_us, lat2d, lon2d)
 
-    mdf = spark.createDataFrame(missing, "variable string, ck string").repartition(
-        min(32, len(missing))
-    )
+    missing_schema = StructType([StructField(n, StringType()) for n in ("variable", "ck")])
+    mdf = spark.createDataFrame(missing, missing_schema).repartition(min(32, len(missing)))
     return decoded.unionByName(mdf.mapInPandas(_synth, schema=GRID_SCHEMA))
 
 

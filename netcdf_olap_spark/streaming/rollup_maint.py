@@ -51,6 +51,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DecimalType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from netcdf_olap_spark.operators.rollup import US_10MIN, build_rollup
 
@@ -58,7 +67,7 @@ from netcdf_olap_spark.operators.rollup import US_10MIN, build_rollup
 # build_rollup's sum over decimal(18,2) widens to this; a narrower
 # cast anywhere would mix parquet schemas across fragments and break
 # the vectorized reader on the next scan (a review finding)
-_SUM_DEC = "decimal(28,2)"
+_SUM_DEC = DecimalType(28, 2)
 
 #: store-root manifest: the compaction COMMIT RECORD (epoch + the
 #: exact files each consumed fragment contributed); the leading
@@ -79,9 +88,16 @@ def _manifest_name(epoch: int) -> str:
 #: one uniform schema for fragments and compacted partitions; the
 #: read never infers (and never needs to — compacted files carry no
 #: extra columns under this protocol)
-_STORE_SCHEMA = (
-    "bucket_us long, event_type string, p_count long, "
-    f"p_sum {_SUM_DEC}, p_min double, p_max double, batch_id int"
+_STORE_SCHEMA = StructType(
+    [
+        StructField("bucket_us", LongType()),
+        StructField("event_type", StringType()),
+        StructField("p_count", LongType()),
+        StructField("p_sum", _SUM_DEC),
+        StructField("p_min", DoubleType()),
+        StructField("p_max", DoubleType()),
+        StructField("batch_id", IntegerType()),
+    ]
 )
 
 

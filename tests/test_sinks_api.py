@@ -12,6 +12,7 @@ from pathlib import Path
 
 import pytest
 
+from netcdf_olap_spark.api import parse_query_payload
 from netcdf_olap_spark.plans import CubeQuery
 from netcdf_olap_spark.queries.grid import POLYGON
 from netcdf_olap_spark.session import load_grid
@@ -142,6 +143,16 @@ def test_api_bad_request(spark):
     payload["selectDate"] = "1990-1-5,1990-1-12"
     r = client.post("/fetchResult", data=json.dumps(payload), content_type="application/json")
     assert r.status_code == 200 and r.mimetype == "application/zip"
+    # a reversed range, in the same lenient form, is rejected at parse
+    # time, before any Spark work
+    payload["selectDate"] = "1990-1-12,1990-1-5"
+    r = client.post("/fetchResult", data=json.dumps(payload), content_type="application/json")
+    assert r.status_code == 400
+    assert r.get_json()["message"].startswith("bad request: selectDate starts after it ends")
+    with pytest.raises(ValueError, match="starts after it ends"):
+        parse_query_payload(payload)
+    # a range within one day is not reversed
+    assert parse_query_payload(dict(payload, selectDate=["1990-01-12T06:00", "1990-1-12"]))
 
 
 def test_render_global_vs_slice_breaks(spark, query, tmp_path):
