@@ -76,8 +76,12 @@ def parse_query_payload(payload: dict) -> CubeQuery:
     variables = payload.get("variables") or []
     if isinstance(variables, str):
         variables = [v for v in variables.split(",") if v]
-    if not variables:
-        raise ValueError("variables must be non-empty")
+    if not (
+        isinstance(variables, list)
+        and variables
+        and all(isinstance(v, str) and v for v in variables)
+    ):
+        raise ValueError("variables must be 'a,b' or a non-empty list of non-empty strings")
     polygon = None
     geo = payload.get("geoJson")
     if geo:

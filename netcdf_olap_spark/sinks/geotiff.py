@@ -64,9 +64,11 @@ def export_geotiff_files(
         import numpy as _np
         import pandas as _pd
 
+        from netcdf_olap_spark.sinks.naming import safe_component
         from netcdf_olap_spark.sources.geotiff import GeoTiffError, write_geotiff
 
-        var = pdf["variable"].iloc[0]
+        # the name comes from file contents: reject it before any work
+        var = safe_component(pdf["variable"].iloc[0], "variable")
         day = str(pdf["day"].iloc[0])
         ys = _np.sort(pdf["y"].unique())
         xs = _np.sort(pdf["x"].unique())
@@ -103,8 +105,6 @@ def export_geotiff_files(
         )
         _os.makedirs(out_, exist_ok=True)
         name = f"{var}_{day}.tif"
-        if "/" in var or ".." in var:
-            raise GeoTiffError(f"hostile variable name {var!r}")
         fd, tmp = _tempfile.mkstemp(dir=out_)
         with _os.fdopen(fd, "wb") as fh:
             fh.write(content)

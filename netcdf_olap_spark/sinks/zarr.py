@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from netcdf_olap_spark.sinks.naming import safe_component
 from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
 from netcdf_olap_spark.sources.zarr import (
     encode_chunk,
@@ -92,11 +93,12 @@ def export_zarr_store(
         )
     variables = sorted(r[0] for r in df.select("variable").distinct().collect())
     for var in variables:
-        # hostile names escape the store root; coordinate names would
-        # overwrite the just-written time/lat/lon arrays (the GeoTIFF
-        # sink's guard, extended with the reserved axis names)
-        if "/" in var or ".." in var or var in ("time", "lat", "lon"):
-            raise ValueError(f"hostile or reserved variable name {var!r}")
+        # hostile names escape the store root (sinks/naming.py);
+        # coordinate names would overwrite the just-written
+        # time/lat/lon arrays
+        safe_component(var, "variable")
+        if var in ("time", "lat", "lon"):
+            raise ValueError(f"reserved variable name {var!r}")
     ys = sorted({r["y"] for r in cells})
     xs = sorted({r["x"] for r in cells})
     nt, ny, nx = len(times), len(ys), len(xs)

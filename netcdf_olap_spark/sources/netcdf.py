@@ -24,11 +24,11 @@ Semantics preserved from the reference:
 Scale design (100 TB): one NetCDF file is one ingest work unit.
 ``ingest_directory`` distributes the *file list* via Spark's
 ``binaryFile`` source and decodes inside ``mapInPandas`` on the
-executors — no driver-side arrays, no collect. The decoder is
-pluggable: netCDF4 when installed (not in this container — gated
-behind an import-try), or any ``bytes -> iterator[pdf]`` callable
-(tests inject a deterministic npz decoder to exercise the real
-distributed plumbing).
+executors — no driver-side arrays, no collect. Every read goes
+through one opener, :func:`open_netcdf`: a magic-byte sniff picks the
+vendored classic (sources/netcdf3.py) or NetCDF-4/HDF5
+(sources/hdf5.py) reader, the way NetCDF-Java picks an IOSP for the
+reference, with no native dependencies.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ import datetime as dt
 import functools
 import threading
 import weakref
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
@@ -169,17 +169,8 @@ def cube_to_df(
 
 
 # ---------------------------------------------------------------------------
-# netCDF4-backed decoding (gated: the library is not in this container)
+# decoding (vendored readers)
 # ---------------------------------------------------------------------------
-
-
-def _netcdf4_available() -> bool:
-    try:
-        import netCDF4  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _mesh_coords(lat: np.ndarray, lon: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -195,87 +186,16 @@ def _mesh_coords(lat: np.ndarray, lon: np.ndarray) -> tuple[np.ndarray, np.ndarr
     return lat, lon
 
 
-def _resolve_coords(nc: Any) -> tuple[np.ndarray | None, np.ndarray | None, np.ndarray | None]:
-    """File-level time/lat/lon resolution: by attribute
-    (geopy.py:51-55), then by conventional variable name. Misses are
-    None — the caller falls back per-variable (dimension names for the
-    netCDF4 library, dimension scales for the vendored reader)."""
-
-    def pick(long_name: str | None, names: tuple[str, ...]):
-        if long_name is not None:
-            by_attr = nc.get_variables_by_attributes(long_name=long_name)
-            if by_attr:
-                return np.asarray(by_attr[0][:])
-        v = next((nc.variables[n] for n in names if n in nc.variables), None)
-        return None if v is None else np.asarray(v[:])
-
-    return pick(None, TIME_NAMES), pick(LAT_LONG_NAME, LAT_NAMES), pick(LON_LONG_NAME, LON_NAMES)
-
-
 def _coord_fits(d: np.ndarray, axis: int, var_shape: tuple[int, ...]) -> bool:
     """Does candidate coordinate array ``d`` fit ``var_shape`` on
     ``axis``? Axis 0 (time) must be 1-D of the right length; spatial
     axes accept a 1-D axis of the right length or a full 2-D (y, x)
-    mesh. ONE definition shared by the library and vendored decoders —
-    multi-grid precedence must not drift between the two ingest paths."""
+    mesh."""
     if axis == 0:
         return d.ndim == 1 and len(d) == var_shape[0]
     if d.ndim == 1:
         return len(d) == var_shape[axis]
     return d.ndim == 2 and d.shape == (var_shape[1], var_shape[2])
-
-
-def netcdf4_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
-    """Decode an in-memory NetCDF file into long frames, one per
-    measure variable (3-D vars not in the coordinate set). Requires
-    netCDF4; callers reach it through ``ingest_directory`` which
-    gates on availability."""
-    import netCDF4
-
-    nc = netCDF4.Dataset("inmem", mode="r", memory=content)
-    try:
-        g_time, g_lat, g_lon = _resolve_coords(nc)
-        for name, var in nc.variables.items():
-            if var.ndim != 3:
-                continue
-            if variables is not None and name not in variables:
-                continue
-
-            # per-variable fallback: in the netCDF model a variable's
-            # coordinate variable carries its dimension's NAME — the
-            # library-level view of HDF5 dimension scales. Per variable,
-            # and shape-guarded (a file-level match sized for another
-            # grid falls through), so multi-grid files never mix
-            # coordinates.
-            vshape = tuple(var.shape)
-
-            def coord(g, axis: int, what: str, _var=var, _vs=vshape):
-                if g is not None and _coord_fits(g, axis, _vs):
-                    return g
-                cv = nc.variables.get(_var.dimensions[axis])
-                if cv is not None:
-                    d = np.asarray(cv[:])
-                    if _coord_fits(d, axis, _vs):
-                        return d
-                if g is not None:
-                    return g  # mismatched everywhere: keep the name match's error surface
-                raise ValueError(
-                    f"no {what} coordinate for variable {name!r}: no long_name match, "
-                    f"no conventional name, and no coordinate variable for dimension "
-                    f"{_var.dimensions[axis]!r}"
-                )
-
-            time_hours = coord(g_time, 0, "time")
-            lat, lon = _mesh_coords(coord(g_lat, 1, "latitude"), coord(g_lon, 2, "longitude"))
-            fill = getattr(var, "_FillValue", None)  # Gddp.scala:188-191
-            vals = var[:]  # materialize ONCE (I/O + memory)
-            if np.ma.isMaskedArray(vals):
-                raw = np.ma.filled(vals, np.nan).astype(np.float64)
-            else:
-                raw = np.asarray(vals, dtype=np.float64)
-            yield cube_to_pandas(ds, name, raw, time_hours, lat, lon, None if fill is None else float(fill))
-    finally:
-        nc.close()
 
 
 def _decode_vendored(nc: Any, ds: str, variables: list[str] | None) -> Iterator[pd.DataFrame]:
@@ -373,29 +293,6 @@ def _decode_vendored(nc: Any, ds: str, variables: list[str] | None) -> Iterator[
         yield pdf
 
 
-def netcdf3_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
-    """Decode classic-format (CDF-1/CDF-2) NetCDF bytes with the
-    vendored pure-numpy reader (sources/netcdf3.py) — the real ``.nc``
-    path for containers without netCDF4, matching the reference's
-    input format (Gddp.scala:53-56). Same semantics as
-    ``netcdf4_decoder``."""
-    from netcdf_olap_spark.sources.netcdf3 import read_netcdf3
-
-    yield from _decode_vendored(read_netcdf3(content, variables), ds, variables)
-
-
-def hdf5_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
-    """Decode NetCDF-4 bytes (HDF5 container — the default output of
-    netCDF-C ≥4.0) with the vendored pure-numpy HDF5 reader
-    (sources/hdf5.py). The reference reads this format through
-    NetCDF-Java (Gddp.scala:53-56; `edu.ucar:cdm` in gddp/build.sbt);
-    this closes the same input-format surface without native deps.
-    Same semantics as ``netcdf4_decoder``."""
-    from netcdf_olap_spark.sources.hdf5 import read_hdf5
-
-    yield from _decode_vendored(read_hdf5(content, variables), ds, variables)
-
-
 def netcdf_format(content: bytes) -> str:
     """Magic-byte sniff, mirroring how NetCDF-Java picks an IOSP for
     the reference: ``\\x89HDF`` → ``"hdf5"`` (NetCDF-4), ``CDF`` →
@@ -407,48 +304,26 @@ def netcdf_format(content: bytes) -> str:
     return "classic" if content[:3] == b"CDF" else "unknown"
 
 
-def auto_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
-    """Dispatch over the vendored readers by ``netcdf_format``; one
-    .nc directory may mix both formats."""
+def open_netcdf(content: bytes, variables: list[str] | None = None) -> Any:
+    """The one NetCDF opener: sniff with ``netcdf_format`` and parse
+    with the vendored NetCDF-4/HDF5 reader (sources/hdf5.py) or the
+    classic CDF-1/CDF-2 reader (sources/netcdf3.py). Anything that is
+    not HDF5 goes to the classic reader, whose "missing CDF magic"
+    error names the problem. ``variables`` is the readers' 3-D
+    allowlist; coordinates always load."""
     if netcdf_format(content) == "hdf5":
-        yield from hdf5_decoder(content, ds, variables)
-    else:
-        yield from netcdf3_decoder(content, ds, variables)
+        from netcdf_olap_spark.sources.hdf5 import read_hdf5
+
+        return read_hdf5(content, variables)
+    from netcdf_olap_spark.sources.netcdf3 import read_netcdf3
+
+    return read_netcdf3(content, variables)
 
 
-def resolve_decoder(name: str) -> Callable[[bytes, str, list[str] | None], Iterator[pd.DataFrame]]:
-    """Decoder-option string → callable — the single dispatch table the
-    ``netcdf_cube`` batch and streaming readers share (unknown names
-    fall back to the npz test decoder)."""
-    return {
-        "netcdf4": netcdf4_decoder,
-        "nc3": netcdf3_decoder,
-        "hdf5": hdf5_decoder,
-        "auto": auto_decoder,
-    }.get(name, npz_decoder)
-
-
-def npz_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
-    """Deterministic stand-in decoder for containers without netCDF4:
-    the same cube layout serialized with ``np.savez`` (keys: ``time``
-    (hours since 1990), ``lat``, ``lon`` (2-D), ``fill__<var>``
-    scalars, and one 3-D array per measure variable). Exercises the
-    full distributed-ingest plumbing with zero native deps."""
-    import io
-
-    with np.load(io.BytesIO(content)) as z:
-        time_hours = z["time"]
-        lat, lon = z["lat"], z["lon"]
-        for name in z.files:
-            if name in ("time", "lat", "lon") or name.startswith("fill__"):
-                continue
-            if variables is not None and name not in variables:
-                continue
-            data = z[name]
-            if data.ndim != 3:  # auxiliary array, not a cube variable
-                continue
-            fill = float(z[f"fill__{name}"]) if f"fill__{name}" in z.files else None
-            yield cube_to_pandas(ds, name, data, time_hours, lat, lon, fill)
+def auto_decoder(content: bytes, ds: str, variables: list[str] | None = None) -> Iterator[pd.DataFrame]:
+    """Decode NetCDF bytes of either format into long frames, one per
+    3-D measure variable; one .nc directory may mix both formats."""
+    yield from _decode_vendored(open_netcdf(content, variables), ds, variables)
 
 
 _PKG_LOCK = threading.Lock()
@@ -636,21 +511,13 @@ def scan_directory_health(spark: SparkSession, path: str, pattern: str = "*.nc")
         import numpy as _np
         import pandas as _pd
 
-        from netcdf_olap_spark.sources.hdf5 import read_hdf5
-        from netcdf_olap_spark.sources.netcdf3 import read_netcdf3
-
         for pdf in batches:
             rows = []
             for p, content in zip(pdf["path"], pdf["content"]):
                 content = bytes(content)
                 fmt = netcdf_format(content)
                 try:
-                    if fmt == "hdf5":
-                        f = read_hdf5(content)
-                    elif fmt == "classic":
-                        f = read_netcdf3(content)
-                    else:
-                        raise ValueError("unrecognized magic bytes")
+                    f = open_netcdf(content)
                     vars3 = [v for v in f.variables.values() if len(v.shape) == 3]
                     cells = sum(int(_np.prod(v.shape)) for v in vars3)
                     rows.append((p, fmt, True, len(vars3), cells, None))
@@ -667,7 +534,6 @@ def ingest_directory(
     ds: str,
     variables: list[str] | None = None,
     pattern: str = "*.nc",
-    decoder: Callable[[bytes, str, list[str] | None], Iterator[pd.DataFrame]] | None = None,
     skip_corrupt: bool = False,
 ) -> DataFrame:
     """Distributed NetCDF directory ingest.
@@ -678,22 +544,16 @@ def ingest_directory(
     Arrow batches of long rows. At 100 TB this scales with the file
     count; no file's rows ever pass through the driver.
 
-    Default decoder: netCDF4 when installed, else ``auto_decoder`` —
-    the vendored readers (classic CDF-1/CDF-2 via sources/netcdf3.py,
-    NetCDF-4/HDF5 via sources/hdf5.py) dispatched on magic bytes, zero
-    native deps.
+    Each file decodes through ``auto_decoder``, so one directory may
+    mix classic and NetCDF-4 files.
     """
-    if decoder is None:
-        decoder = netcdf4_decoder if _netcdf4_available() else auto_decoder
     ensure_package_on_workers(spark)
 
     files = spark.read.format("binaryFile").option("pathGlobFilter", pattern).load(path)
 
-    # Self-contained closure (pickled by value except `decoder`, which
-    # tests supply from their own module): no references to this
-    # package inside, so Python workers never need netcdf_olap_spark
-    # importable regardless of the driver process's cwd.
-    dec, ds_, vars_, skip_ = decoder, ds, variables, skip_corrupt
+    # The closure is pickled by value; `auto_decoder` goes by reference
+    # and resolves from the package zip ensure_package_on_workers ships.
+    dec, ds_, vars_, skip_ = auto_decoder, ds, variables, skip_corrupt
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -44,7 +44,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from netcdf_olap_spark.sources.netcdf import GRID_SCHEMA, netcdf_format
+from netcdf_olap_spark.sources.netcdf import GRID_SCHEMA
 
 
 class CubeFilePartition(InputPartition):
@@ -61,15 +61,14 @@ class NetCDFCubeDataSource(DataSource):
 
     Options:
       - ``path`` (or the ``load()`` argument): directory of cube files
-      - ``pattern``: glob within the directory (default ``*.npz``;
-        ``*.nc`` with netCDF4 installed)
+      - ``pattern``: glob within the directory (default ``*.nc``)
       - ``ds``: dataset id stamped on every row (default: dir name)
       - ``variables``: comma-separated measure-variable allowlist —
         partition-level pruning (SURVEY P1)
-      - ``decoder``: ``npz`` (default), ``nc3`` (vendored classic-
-        format reader, no native deps), ``hdf5`` (vendored NetCDF-4/
-        HDF5 reader, no native deps), ``auto`` (magic-byte dispatch
-        between the vendored readers), or ``netcdf4``
+
+    Files decode with ``sources.netcdf.auto_decoder``, the same reader
+    ``ingest_directory`` uses, so one directory may mix classic and
+    NetCDF-4 files.
     """
 
     @classmethod
@@ -86,48 +85,17 @@ class NetCDFCubeDataSource(DataSource):
         return NetCDFCubeStreamReader(self.options)
 
 
-def _list_variables(path: str, decoder: str) -> list[str]:
+def _list_variables(path: str) -> list[str]:
     """Cheap metadata probe (driver-side, once per file at planning —
     the reference does the same per-file variable listing,
-    Gddp.scala:119-131). npz reads the zip directory only; arrays are
-    lazy."""
-    if decoder == "netcdf4":
-        import netCDF4
+    Gddp.scala:119-131): the file's 3-D measure variables."""
+    from netcdf_olap_spark.sources.netcdf import open_netcdf
 
-        nc = netCDF4.Dataset(path)
-        try:
-            out = []
-            for name, v in nc.variables.items():
-                if name in ("time", "lat", "lon", "x", "y"):
-                    continue
-                if v.ndim == 3:
-                    out.append(name)
-            return out
-        finally:
-            nc.close()
-    if decoder in ("nc3", "hdf5", "auto"):
-        from netcdf_olap_spark.sources.hdf5 import read_hdf5
-        from netcdf_olap_spark.sources.netcdf3 import read_netcdf3
-
-        # data arrays are zero-copy frombuffer views, so this costs one
-        # file read; at real scale, probe a header-only byte range
-        with open(path, "rb") as fh:
-            content = fh.read()
-        if decoder == "hdf5" or (decoder == "auto" and netcdf_format(content) == "hdf5"):
-            ncf = read_hdf5(content)
-        else:
-            ncf = read_netcdf3(content)
-        return [n for n, v in ncf.variables.items() if len(v.shape) == 3]
-    import numpy as np
-
-    with np.load(path) as z:
-        return [
-            n
-            for n in z.files
-            if n not in ("time", "lat", "lon")
-            and not n.startswith("fill__")
-            and z[n].ndim == 3  # same measure-variable contract as the other decoders
-        ]
+    # data arrays are zero-copy frombuffer views, so this costs one
+    # file read; at real scale, probe a header-only byte range
+    with open(path, "rb") as fh:
+        ncf = open_netcdf(fh.read())
+    return [n for n, v in ncf.variables.items() if len(v.shape) == 3]
 
 
 class NetCDFCubeReader(DataSourceReader):
@@ -135,9 +103,8 @@ class NetCDFCubeReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("netcdf_cube: path is required")
-        self.pattern = options.get("pattern", "*.npz")
+        self.pattern = options.get("pattern", "*.nc")
         self.ds = options.get("ds") or os.path.basename(self.path.rstrip("/"))
-        self.decoder = options.get("decoder", "npz")
         raw = options.get("variables")
         self.variables: Sequence[str] | None = (
             [v.strip() for v in raw.split(",") if v.strip()] if raw else None
@@ -149,7 +116,7 @@ class NetCDFCubeReader(DataSourceReader):
             raise FileNotFoundError(f"netcdf_cube: no {self.pattern} in {self.path}")
         parts = []
         for f in files:
-            for v in _list_variables(f, self.decoder):
+            for v in _list_variables(f):
                 if self.variables is not None and v not in self.variables:
                     continue  # partition-level variable pruning
                 parts.append(CubeFilePartition(f, self.ds, v))
@@ -162,12 +129,11 @@ class NetCDFCubeReader(DataSourceReader):
         Gddp.scala:126, 188-191)."""
         import pyarrow as pa
 
-        from netcdf_olap_spark.sources.netcdf import resolve_decoder
+        from netcdf_olap_spark.sources.netcdf import auto_decoder
 
-        dec = resolve_decoder(self.decoder)
         with open(partition.path, "rb") as fh:
             content = fh.read()
-        for pdf in dec(content, partition.ds, [partition.variable]):
+        for pdf in auto_decoder(content, partition.ds, [partition.variable]):
             table = pa.Table.from_pandas(pdf, preserve_index=False)
             yield from table.to_batches(max_chunksize=10_000)
 
@@ -227,12 +193,10 @@ class NetCDFCubeStreamReader(SimpleDataSourceStreamReader):
 
     def _rows_for(self, files: list[str]):
         _ensure_importable(self.pkg_parent)
-        from netcdf_olap_spark.sources.netcdf import resolve_decoder
+        from netcdf_olap_spark.sources.netcdf import auto_decoder
 
         import numpy as np
         import pandas as pd
-
-        dec = resolve_decoder(self.inner.decoder)
 
         def _py(x):
             # the batch path gets these conversions free from Arrow:
@@ -251,13 +215,9 @@ class NetCDFCubeStreamReader(SimpleDataSourceStreamReader):
         for f in files:
             with open(f, "rb") as fh:
                 content = fh.read()
-            want = self.inner.variables
-            for v in _list_variables(f, self.inner.decoder):
-                if want is not None and v not in want:
-                    continue
-                for pdf in dec(content, self.inner.ds, [v]):
-                    for t in pdf.itertuples(index=False, name=None):
-                        out.append(tuple(_py(x) for x in t))
+            for pdf in auto_decoder(content, self.inner.ds, self.inner.variables):
+                for t in pdf.itertuples(index=False, name=None):
+                    out.append(tuple(_py(x) for x in t))
         return iter(out)
 
     def read(self, start: dict):

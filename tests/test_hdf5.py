@@ -1,9 +1,9 @@
 """Vendored HDF5 (NetCDF-4 container) reader/writer (sources/hdf5.py)
-and the NetCDF-4 ingest path (sources/netcdf.hdf5_decoder /
-auto_decoder): spec-level byte layout, round-trips (contiguous,
-chunked, deflate/shuffle filters, edge chunks), and end-to-end
-distributed ingest of a MIXED .nc directory (classic + HDF5 files,
-auto-dispatched on magic bytes) — the same dual-format surface the
+and the NetCDF-4 ingest path (sources/netcdf.auto_decoder): spec-level
+byte layout, round-trips (contiguous, chunked, deflate/shuffle
+filters, edge chunks), and end-to-end distributed ingest of a MIXED
+.nc directory (classic + HDF5 files, auto-dispatched on magic bytes)
+— the same dual-format surface the
 reference gets from NetCDF-Java (Gddp.scala:53-56, `edu.ucar:cdm`).
 
 Round-trip tests alone could hide complementary writer/reader bugs,
@@ -433,10 +433,10 @@ def test_latest_roundtrip(kw):
 
 
 def test_latest_decoder_same_grid_rows():
-    """hdf5_decoder output is profile-independent."""
+    """Decoded rows are profile-independent."""
     data, th, lat, lon = _cube(21)
-    a = list(src.hdf5_decoder(_h5_bytes(data, th, lat, lon), ds="d"))[0]
-    b = list(src.hdf5_decoder(_h5_bytes(data, th, lat, lon, libver="latest"), ds="d"))[0]
+    a = list(src.auto_decoder(_h5_bytes(data, th, lat, lon), ds="d"))[0]
+    b = list(src.auto_decoder(_h5_bytes(data, th, lat, lon, libver="latest"), ds="d"))[0]
     pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
 
 
@@ -449,7 +449,7 @@ def test_hdf5_decoder_matches_reference_semantics():
     """Fill→NaN, 1990-epoch hours, rectilinear axes meshed to 2-D —
     identical frame to the classic-format decoder on the same cube."""
     data, th, lat, lon = _cube()
-    frames = list(src.hdf5_decoder(_h5_bytes(data, th, lat, lon), ds="d1"))
+    frames = list(src.auto_decoder(_h5_bytes(data, th, lat, lon), ds="d1"))
     assert len(frames) == 1
     got = frames[0]
 
@@ -509,7 +509,7 @@ def test_ingest_directory_mixed_formats(spark, tmp_path):
 
 def test_cube_stream_mixed_nc_formats(spark, tmp_path):
     """Streaming directory scan over REAL .nc arrivals, one classic
-    and one HDF5 file (decoder=auto): each lands as a micro-batch with
+    and one HDF5 file: each lands as a micro-batch with
     rows equal to the batch ingest of the same bytes."""
     from pyspark.sql import functions as F
 
@@ -532,7 +532,7 @@ def test_cube_stream_mixed_nc_formats(spark, tmp_path):
 
     stream = (
         spark.readStream.format("netcdf_cube")
-        .options(path=str(d), pattern="*.nc", ds="live", decoder="auto")
+        .options(path=str(d), pattern="*.nc", ds="live")
         .load()
     )
     q = (
@@ -560,7 +560,7 @@ def test_cube_stream_mixed_nc_formats(spark, tmp_path):
 
 
 def test_python_datasource_hdf5_decoder(spark, tmp_path):
-    """format('netcdf_cube') with decoder=auto reads a NetCDF-4 file —
+    """format('netcdf_cube') reads a NetCDF-4 file —
     same rows as the mapInPandas ingest path."""
     from netcdf_olap_spark.sources import netcdf_datasource as nds
 
@@ -572,7 +572,6 @@ def test_python_datasource_hdf5_decoder(spark, tmp_path):
         spark.read.format("netcdf_cube")
         .option("ds", "dh5")
         .option("pattern", "*.nc")
-        .option("decoder", "auto")
         .load(str(tmp_path))
     )
     want = src.ingest_directory(spark, str(tmp_path), ds="dh5")
@@ -605,7 +604,7 @@ def test_cf_packed_variable_unpacks_like_netcdf4():
             ),
         }
     )
-    frames = list(src.hdf5_decoder(content, ds="cf"))
+    frames = list(src.auto_decoder(content, ds="cf"))
     got = frames[0]
     vals = got.sort_values(["y", "x"])["value"].to_numpy()
     want = np.array([283.0, 293.0, np.nan, 303.0, np.nan, 323.0])

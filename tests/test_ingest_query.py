@@ -194,7 +194,7 @@ def test_nc_stream_feeds_windowed_aggregate(spark, tmp_path):
 
     stream = (
         spark.readStream.format("netcdf_cube")
-        .options(path=str(d), pattern="*.nc", ds="live", decoder="auto")
+        .options(path=str(d), pattern="*.nc", ds="live")
         .load()
     )
     q = (

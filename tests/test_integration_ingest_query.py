@@ -6,7 +6,6 @@ minus only the HTTP wrapper."""
 
 from __future__ import annotations
 
-import io
 import os
 
 import numpy as np
@@ -15,15 +14,26 @@ from pyspark.sql import functions as F
 
 from netcdf_olap_spark.plans import CubeQuery
 from netcdf_olap_spark.sources import netcdf as src
+from netcdf_olap_spark.sources.netcdf3 import write_netcdf3
 
 NT, NY, NX = 10, 12, 14
 FILL = -9.99e8
 
 
-def _write_npz(path, var, data, th, lat, lon):
-    buf = io.BytesIO()
-    np.savez(buf, time=th, lat=lat, lon=lon, **{var: data, f"fill__{var}": np.float64(FILL)})
-    path.write_bytes(buf.getvalue())
+def _write_nc(path, var, data, th, lat, lon):
+    """One cube as a classic CDF-1 file with 2-D lat/lon and FILL as
+    its ``_FillValue``."""
+    path.write_bytes(
+        write_netcdf3(
+            dimensions={"time": None, "y": NY, "x": NX},
+            variables={
+                "time": (("time",), th, {"units": "hours since 1990-01-01"}),
+                "lat": (("y", "x"), lat, {"long_name": "latitude coordinate"}),
+                "lon": (("y", "x"), lon, {"long_name": "longitude coordinate"}),
+                var: (("time", "y", "x"), data, {"_FillValue": FILL}),
+            },
+        )
+    )
 
 
 def test_ingest_then_flagship_query(spark, tmp_path):
@@ -37,10 +47,10 @@ def test_ingest_then_flagship_query(spark, tmp_path):
         data = rng.normal(270.0 + 10 * i, 3.0, (NT, NY, NX))
         data[rng.random((NT, NY, NX)) < 0.05] = FILL
         cubes[var] = data
-        _write_npz(tmp_path / f"{var}.npz", var, data, np.arange(NT) * 24, lat, lon)
+        _write_nc(tmp_path / f"{var}.nc", var, data, np.arange(NT) * 24, lat, lon)
 
     # distributed ingest → partitioned layout → read back
-    raw = src.ingest_directory(spark, str(tmp_path), ds="itest", pattern="*.npz", decoder=src.npz_decoder)
+    raw = src.ingest_directory(spark, str(tmp_path), ds="itest")
     out = os.path.join(str(tmp_path), "cube_parquet")
     src.write_cube_parquet(raw, out)
     grid = src.read_cube_parquet(spark, out)

@@ -1,5 +1,5 @@
 """Vendored NetCDF-3 classic reader/writer (sources/netcdf3.py) and
-the real `.nc` ingest path (sources/netcdf.netcdf3_decoder): spec-level
+the real `.nc` ingest path (sources/netcdf.auto_decoder): spec-level
 byte layout, round-trips, and end-to-end distributed ingest of genuine
 classic-format bytes (the reference's input format, Gddp.scala:53-56).
 """
@@ -201,7 +201,7 @@ def test_netcdf3_decoder_matches_reference_semantics():
     """Fill→NaN, 1990-epoch hours, rectilinear axes meshed to 2-D —
     the same frame cube_to_pandas produces from raw arrays."""
     data, time_hours, lat, lon = _cube()
-    frames = list(src.netcdf3_decoder(_nc_bytes(data, time_hours, lat, lon), ds="d1"))
+    frames = list(src.auto_decoder(_nc_bytes(data, time_hours, lat, lon), ds="d1"))
     assert len(frames) == 1
     got = frames[0]
 
@@ -215,7 +215,7 @@ def test_netcdf3_decoder_matches_reference_semantics():
 
 
 def test_python_datasource_nc3_decoder(spark, tmp_path):
-    """format('netcdf_cube') with decoder=nc3 reads genuine classic
+    """format('netcdf_cube') reads genuine classic
     .nc files — same rows as the mapInPandas ingest path."""
     from netcdf_olap_spark.sources import netcdf_datasource as nds
 
@@ -227,7 +227,6 @@ def test_python_datasource_nc3_decoder(spark, tmp_path):
         spark.read.format("netcdf_cube")
         .option("ds", "dnc")
         .option("pattern", "*.nc")
-        .option("decoder", "nc3")
         .load(str(tmp_path))
     )
     want = src.ingest_directory(spark, str(tmp_path), ds="dnc")
@@ -239,7 +238,7 @@ def test_python_datasource_nc3_decoder(spark, tmp_path):
 
 def test_ingest_directory_real_nc_files(spark, tmp_path):
     """End-to-end S1: genuine classic-format .nc files through the
-    default decoder path (no decoder= injection) — binaryFile →
+    default decoder path — binaryFile →
     mapInPandas → GRID_SCHEMA rows."""
     d1, th, lat, lon = _cube(1)
     d2, _, _, _ = _cube(2)

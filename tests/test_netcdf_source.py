@@ -6,7 +6,6 @@ overlap test (Gddp.scala:132-133)."""
 
 from __future__ import annotations
 
-import io
 import os
 
 import numpy as np
@@ -14,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from netcdf_olap_spark.sources import netcdf as src
+from netcdf_olap_spark.sources.hdf5 import write_hdf5
+from netcdf_olap_spark.sources.netcdf3 import write_netcdf3
 
 NT, NY, NX = 4, 5, 6
 FILL = -9999.0
@@ -31,10 +32,19 @@ def _cube(seed: int = 7):
     return data, time_hours, lat, lon
 
 
-def _npz_bytes(data, time_hours, lat, lon, var="tas") -> bytes:
-    buf = io.BytesIO()
-    np.savez(buf, time=time_hours, lat=lat, lon=lon, **{var: data, f"fill__{var}": np.float64(FILL)})
-    return buf.getvalue()
+def _nc_bytes(time_hours, lat, lon, **cubes) -> bytes:
+    """Classic CDF-1 bytes: time (record dim) × y × x cubes named by
+    the keywords, 2-D curvilinear lat/lon found by ``long_name``, and
+    FILL as each cube's ``_FillValue``."""
+    return write_netcdf3(
+        dimensions={"time": None, "y": lat.shape[0], "x": lat.shape[1]},
+        variables={
+            "time": (("time",), time_hours, {"units": "hours since 1990-01-01"}),
+            "lat": (("y", "x"), lat, {"long_name": "latitude coordinate"}),
+            "lon": (("y", "x"), lon, {"long_name": "longitude coordinate"}),
+            **{v: (("time", "y", "x"), d, {"_FillValue": FILL}) for v, d in cubes.items()},
+        },
+    )
 
 
 def test_cube_to_df_time_decode_and_fill(spark):
@@ -69,12 +79,10 @@ def test_ingest_directory_distributed(spark, tmp_path):
     path == union of the driver-side conversions."""
     d1, th, lat, lon = _cube(1)
     d2, _, _, _ = _cube(2)
-    (tmp_path / "a.npz").write_bytes(_npz_bytes(d1, th, lat, lon))
-    (tmp_path / "b.npz").write_bytes(_npz_bytes(d2, th + NT * 24, lat, lon))
+    (tmp_path / "a.nc").write_bytes(_nc_bytes(th, lat, lon, tas=d1))
+    (tmp_path / "b.nc").write_bytes(_nc_bytes(th + NT * 24, lat, lon, tas=d2))
 
-    df = src.ingest_directory(
-        spark, str(tmp_path), ds="d1", pattern="*.npz", decoder=src.npz_decoder
-    )
+    df = src.ingest_directory(spark, str(tmp_path), ds="d1")
     assert df.count() == 2 * NT * NY * NX
     assert df.schema == src.GRID_SCHEMA
     # file 2's time axis is shifted: distinct timestamps = 2*NT
@@ -83,11 +91,9 @@ def test_ingest_directory_distributed(spark, tmp_path):
 
 
 def test_ingest_directory_default_decoder_is_real_nc(spark, tmp_path):
-    """Without netCDF4, the default decoder is the vendored classic
-    reader — genuine .nc bytes decode with no decoder= injection
-    (full end-to-end coverage in tests/test_netcdf3.py)."""
-    if src._netcdf4_available():
-        pytest.skip("netCDF4 installed; fallback not reachable")
+    """Bytes that are not HDF5 go to the vendored classic reader,
+    whose magic check names the problem (full end-to-end coverage in
+    tests/test_netcdf3.py)."""
     bad = tmp_path / "x.nc"
     bad.write_bytes(b"not a netcdf file")
     df = src.ingest_directory(spark, str(tmp_path), ds="d1")
@@ -144,10 +150,8 @@ def test_python_datasource_matches_mapinpandas_ingest(spark, tmp_path):
 
     d1, th, lat, lon = _cube(1)
     d2, _, _, _ = _cube(2)
-    buf1 = io.BytesIO()
-    np.savez(buf1, time=th, lat=lat, lon=lon, tas=d1, **{"fill__tas": np.float64(FILL)}, pr=d2)
-    (tmp_path / "a.npz").write_bytes(buf1.getvalue())
-    (tmp_path / "b.npz").write_bytes(_npz_bytes(d2, th + NT * 24, lat, lon))
+    (tmp_path / "a.nc").write_bytes(_nc_bytes(th, lat, lon, tas=d1, pr=d2))
+    (tmp_path / "b.nc").write_bytes(_nc_bytes(th + NT * 24, lat, lon, tas=d2))
 
     nds.register(spark)
     got = (
@@ -155,9 +159,7 @@ def test_python_datasource_matches_mapinpandas_ingest(spark, tmp_path):
         .option("ds", "dtest")
         .load(str(tmp_path))
     )
-    want = src.ingest_directory(
-        spark, str(tmp_path), ds="dtest", pattern="*.npz", decoder=src.npz_decoder
-    )
+    want = src.ingest_directory(spark, str(tmp_path), ds="dtest")
     key = ["variable", "time", "y", "x"]
     assert got.count() == want.count() == 2 * NT * NY * NX + NT * NY * NX
     g = [tuple(r) for r in got.orderBy(*key).collect()]
@@ -173,6 +175,38 @@ def test_python_datasource_matches_mapinpandas_ingest(spark, tmp_path):
     assert pruned.select("variable").distinct().collect() == [("tas",)]
 
 
+def test_python_datasource_default_options_read_mixed_nc(spark, tmp_path):
+    """``load(dir)`` with no options reads a directory of .nc files of
+    both formats and yields exactly the ``ingest_directory`` rows, with
+    ``ds`` defaulting to the directory name."""
+    from netcdf_olap_spark.sources import netcdf_datasource as nds
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    d1, th, lat, lon = _cube(1)
+    d2, _, _, _ = _cube(2)
+    (d / "classic.nc").write_bytes(_nc_bytes(th, lat, lon, tas=d1))
+    (d / "modern.nc").write_bytes(
+        write_hdf5(
+            {
+                "time": ((th + NT * 24).astype("<i4"), {"long_name": "time"}),
+                "lat": (lat, {"long_name": "latitude coordinate"}),
+                "lon": (lon, {"long_name": "longitude coordinate"}),
+                "tas": (d2, {"_FillValue": FILL}),
+            }
+        )
+    )
+
+    nds.register(spark)
+    got = spark.read.format("netcdf_cube").load(str(d))
+    want = src.ingest_directory(spark, str(d), ds="mixed")
+    key = ["variable", "time", "y", "x"]
+    g = [tuple(r) for r in got.orderBy(*key).collect()]
+    assert g == [tuple(r) for r in want.orderBy(*key).collect()]
+    assert len(g) == 2 * NT * NY * NX and {r[0] for r in g} == {"mixed"}
+    assert sum(r[-1] is None for r in g) == 4  # 2 fill cells per file
+
+
 def test_cube_stream_ingests_arriving_files(spark, tmp_path):
     """Streaming form of the directory scan: files landing in the
     watched directory appear as micro-batches; rows equal the batch
@@ -184,13 +218,9 @@ def test_cube_stream_ingests_arriving_files(spark, tmp_path):
     d = tmp_path / "arrivals"
     d.mkdir()
     data, th, lat, lon = _cube()
-    (d / "day1.npz").write_bytes(_npz_bytes(data, th, lat, lon))
+    (d / "day1.nc").write_bytes(_nc_bytes(th, lat, lon, tas=data))
 
-    stream = (
-        spark.readStream.format("netcdf_cube")
-        .options(path=str(d), pattern="*.npz", ds="live")
-        .load()
-    )
+    stream = spark.readStream.format("netcdf_cube").options(path=str(d), ds="live").load()
     q = (
         stream.writeStream.format("memory")
         .queryName("cube_arrivals")
@@ -204,7 +234,7 @@ def test_cube_stream_ingests_arriving_files(spark, tmp_path):
         assert got1 == data.size
 
         data2 = _cube(seed=8)[0]  # fresh values, same two FILL cells
-        (d / "day2.npz").write_bytes(_npz_bytes(data2, th + len(th) * 24, lat, lon))
+        (d / "day2.nc").write_bytes(_nc_bytes(th + len(th) * 24, lat, lon, tas=data2))
         q.processAllAvailable()
         out = spark.table("cube_arrivals")
         assert out.count() == 2 * data.size
@@ -223,14 +253,10 @@ def test_ingest_directory_accepts_filesystem_uri(spark, tmp_path):
     resolution path s3a://\u2009/\u2009hdfs:// take) yields the identical
     cube as the bare local path."""
     d1, th, lat, lon = _cube(1)
-    (tmp_path / "a.npz").write_bytes(_npz_bytes(d1, th, lat, lon))
+    (tmp_path / "a.nc").write_bytes(_nc_bytes(th, lat, lon, tas=d1))
 
-    plain = src.ingest_directory(
-        spark, str(tmp_path), ds="d1", pattern="*.npz", decoder=src.npz_decoder
-    )
-    via_uri = src.ingest_directory(
-        spark, f"file://{tmp_path}", ds="d1", pattern="*.npz", decoder=src.npz_decoder
-    )
+    plain = src.ingest_directory(spark, str(tmp_path), ds="d1")
+    via_uri = src.ingest_directory(spark, f"file://{tmp_path}", ds="d1")
     assert via_uri.count() == plain.count() == NT * NY * NX
     a = {tuple(r) for r in plain.collect()}
     b = {tuple(r) for r in via_uri.collect()}
@@ -300,7 +326,7 @@ def test_decode_resolves_coords_via_dimension_scales():
         {"m": (cube, {"units": "K"}), "tsteps": (t, {}), "rlat": (la, {}), "rlon": (lo, {})},
         dim_scales={"m": ("tsteps", "rlat", "rlon")},
     )
-    (pdf,) = list(src.hdf5_decoder(b, "ds1"))
+    (pdf,) = list(src.auto_decoder(b, "ds1"))
     assert len(pdf) == 3 * 4 * 5
     got = pdf.sort_values(["time", "y", "x"])["value"].to_numpy().reshape(3, 4, 5)
     np.testing.assert_allclose(got, cube)
@@ -310,7 +336,7 @@ def test_decode_resolves_coords_via_dimension_scales():
 
     b_bad = write_hdf5({"m": (cube, {}), "zz": (t, {})})
     with _pytest.raises(ValueError, match="no .* coordinate for variable 'm'"):
-        list(src.hdf5_decoder(b_bad, "ds3"))
+        list(src.auto_decoder(b_bad, "ds3"))
 
 
 def test_decode_multi_grid_file_keeps_coords_per_variable():
@@ -334,7 +360,7 @@ def test_decode_multi_grid_file_keeps_coords_per_variable():
         },
         dim_scales={"m1": ("ts", "la1", "lo1"), "m2": ("ts", "la2", "lo2")},
     )
-    frames = {str(p["variable"].iloc[0]): p for p in src.hdf5_decoder(b, "ds")}
+    frames = {str(p["variable"].iloc[0]): p for p in src.auto_decoder(b, "ds")}
     assert set(frames) == {"m1", "m2"}
     assert sorted(frames["m1"]["lat"].unique()) == [40.0, 41.0]
     assert sorted(frames["m2"]["lat"].unique()) == [10.0, 11.0]
@@ -361,7 +387,7 @@ def test_decode_mixed_rank_coordinates_broadcast():
         },
         dim_scales={"m": ("ts", None, "lonscale")},
     )
-    (pdf,) = list(src.hdf5_decoder(b, "ds"))
+    (pdf,) = list(src.auto_decoder(b, "ds"))
     assert len(pdf) == 12
     assert sorted(pdf["lon"].unique()) == [-80.0, -79.0, -78.0]
     assert sorted(pdf["lat"].unique()) == sorted(lat2d.ravel())
@@ -390,7 +416,7 @@ def test_decode_named_coords_wrong_shape_fall_through_to_scales():
         },
         dim_scales={"mB": ("time", "laB", "loB")},
     )
-    frames = {str(p["variable"].iloc[0]): p for p in src.hdf5_decoder(b, "ds")}
+    frames = {str(p["variable"].iloc[0]): p for p in src.auto_decoder(b, "ds")}
     assert sorted(frames["mA"]["lat"].unique()) == [40.0, 41.0]
     assert sorted(frames["mB"]["lat"].unique()) == sorted(laB)
     assert sorted(frames["mB"]["lon"].unique()) == sorted(loB)

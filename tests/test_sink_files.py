@@ -132,24 +132,41 @@ def test_png_filename_rejects_traversal():
 
 
 @pytest.mark.parametrize("column", ["ds", "variable"])
-@pytest.mark.parametrize("sink", ["export_netcdf_files", "render_png_files"])
+@pytest.mark.parametrize(
+    "sink", ["export_netcdf_files", "render_png_files", "export_geotiff_files", "export_zarr_store"]
+)
 def test_files_export_rejects_hostile_variable(spark, tmp_path, sink, column):
-    """A crafted file can carry any bytes as a ds/variable name: a task
-    whose filename uses the name must fail, and nothing may land
-    outside out_dir (PNG names carry no ds, so that case writes)."""
+    """A crafted file can carry any bytes as a ds/variable name: a sink
+    whose filenames use the name must fail with an error naming it, and
+    nothing may land outside out_dir (only NetCDF names carry ds, so
+    the other sinks write). Every sink applies the one
+    sinks/naming.safe_component rule, which also rejects a leading
+    dot."""
+    import re
+
     from pyspark.sql import functions as F
 
-    cube = _cube_df(spark, seed=29).withColumn(column, F.lit("../../pwned"))
+    from netcdf_olap_spark.sinks.geotiff import export_geotiff_files
+    from netcdf_olap_spark.sinks.zarr import export_zarr_store
+
     out = tmp_path / "deep" / "hostile"
-    if sink == "export_netcdf_files":
-        manifest = export_netcdf_files(cube, str(out), fmt="classic")
-    else:
-        manifest = render_png_files(cube, str(out), "1990-01-01", "1990-01-06")
-    if (sink, column) == ("render_png_files", "ds"):
-        manifest.collect()
-    else:
-        with pytest.raises(Exception, match="not a safe|contains"):
-            manifest.collect()
+
+    def export(cube):
+        if sink == "export_netcdf_files":
+            return export_netcdf_files(cube, str(out), fmt="classic").collect()
+        if sink == "render_png_files":
+            return render_png_files(cube, str(out), "1990-01-01", "1990-01-06").collect()
+        if sink == "export_geotiff_files":
+            return export_geotiff_files(cube, str(out)).collect()
+        return export_zarr_store(cube, str(out)).collect()
+
+    for bad in ("../../pwned", ".hidden"):
+        cube = _cube_df(spark, seed=29).withColumn(column, F.lit(bad))
+        if column == "ds" and sink != "export_netcdf_files":
+            export(cube)
+        else:
+            with pytest.raises(Exception, match=re.escape(f"{column} {bad!r}")):
+                export(cube)
     assert all(out in p.parents for p in tmp_path.rglob("*") if p.is_file())
     assert not list(tmp_path.parent.glob("*pwned*"))
 

@@ -153,6 +153,15 @@ def test_api_bad_request(spark):
         parse_query_payload(payload)
     # a range within one day is not reversed
     assert parse_query_payload(dict(payload, selectDate=["1990-01-12T06:00", "1990-1-12"]))
+    # a malformed variables field is a 400 at parse time, before any
+    # Spark work, not a 500 from the engine
+    for bad in (5, [5], ["LST_LWST_avg_daily", ""], {"LST_LWST_avg_daily": 1}, True):
+        body = dict(payload, selectDate="1990-1-5,1990-1-12", variables=bad)
+        r = client.post("/fetchResult", data=json.dumps(body), content_type="application/json")
+        assert r.status_code == 400, bad
+        assert r.get_json()["message"].startswith("bad request: variables"), bad
+        with pytest.raises(ValueError, match="variables"):
+            parse_query_payload(body)
 
 
 def test_render_global_vs_slice_breaks(spark, query, tmp_path):
