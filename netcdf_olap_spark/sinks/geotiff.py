@@ -2,9 +2,9 @@
 
 The raster-product twin of sinks/netcdf.py and sinks/zarr.py: one
 single-band GeoTIFF per (ds, variable, day), written INSIDE its
-``applyInPandas`` task (tempfile + atomic replace, manifest rows
-only to the driver — the reference's write-from-the-task contract,
-Gddp.scala:235-236).  File names follow the ingest contract
+``applyInPandas`` task by ``sinks/naming.write_artifact`` (atomic,
+manifest rows only to the driver — the reference's write-from-the-task
+contract, Gddp.scala:235-236).  File names follow the ingest contract
 (``{variable}_{YYYY-MM-DD}.tif``), so export∘ingest composes.
 
 GeoTIFF's pixel-scale/tiepoint model is an AFFINE north-up grid; a
@@ -20,22 +20,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
+from netcdf_olap_spark.sinks.naming import ARTIFACT_FIELDS
 from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
 
 GEOTIFF_MANIFEST_SCHEMA = StructType(
     [
         StructField("variable", StringType()),
         StructField("day", StringType()),
-        StructField("path", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("sha256", StringType()),
         StructField("n_valid", IntegerType()),
+        *ARTIFACT_FIELDS,
     ]
 )
 
@@ -57,14 +55,10 @@ def export_geotiff_files(
     out_, nod_, comp_, tile_ = out_dir, float(nodata), compression, tile
 
     def _write(pdf):
-        import hashlib as _hashlib
-        import os as _os
-        import tempfile as _tempfile
-
         import numpy as _np
         import pandas as _pd
 
-        from netcdf_olap_spark.sinks.naming import safe_component
+        from netcdf_olap_spark.sinks.naming import safe_component, write_artifact
         from netcdf_olap_spark.sources.geotiff import GeoTiffError, write_geotiff
 
         # the name comes from file contents: reject it before any work
@@ -103,22 +97,13 @@ def export_geotiff_files(
             grid, lat0=lat0, lon0=lon0, dlat=dlat, dlon=dlon,
             nodata=nod_, compression=comp_, tile=tile_,
         )
-        _os.makedirs(out_, exist_ok=True)
-        name = f"{var}_{day}.tif"
-        fd, tmp = _tempfile.mkstemp(dir=out_)
-        with _os.fdopen(fd, "wb") as fh:
-            fh.write(content)
-        path = _os.path.join(out_, name)
-        _os.replace(tmp, path)
         return _pd.DataFrame(
             [
                 {
                     "variable": var,
                     "day": day,
-                    "path": path,
-                    "n_bytes": len(content),
-                    "sha256": _hashlib.sha256(content).hexdigest(),
                     "n_valid": int((vals != nod_).sum()),
+                    **write_artifact(out_, f"{var}_{day}.tif", content),
                 }
             ]
         )

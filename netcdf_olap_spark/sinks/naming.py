@@ -1,4 +1,5 @@
-"""Filename-component validation shared by the artifact sinks.
+"""The landing step shared by the artifact sinks: filename-component
+validation and the one artifact writer.
 
 The vendored readers (sources/hdf5.py, sources/netcdf3.py) accept
 arbitrary bytes as variable names — they parse what's in the file and
@@ -8,14 +9,30 @@ file with a variable named ``../../x`` could otherwise write outside
 the output directory (and put path-traversal entries into result.zip
 — zip-slip for extracting clients). Every sink path component goes
 through :func:`safe_component` before touching a filesystem or zip.
+
+Every sink task hands its encoded bytes to :func:`write_artifact`,
+which lands them atomically and returns the manifest's
+:data:`ARTIFACT_FIELDS`; no sink writes a file any other way.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
+import tempfile
+
+from pyspark.sql.types import LongType, StringType, StructField
 
 # control chars and both path separators; '..' is rejected separately
 _BAD = re.compile(r"[\x00-\x1f/\\]")
+
+# the tail of every sink's manifest schema: what write_artifact returns
+ARTIFACT_FIELDS = [
+    StructField("path", StringType()),
+    StructField("size", LongType()),
+    StructField("sha256", StringType()),
+]
 
 
 def safe_component(name: str, what: str = "name") -> str:
@@ -33,3 +50,29 @@ def safe_component(name: str, what: str = "name") -> str:
     if name != name.strip() or name.startswith("."):
         raise ValueError(f"{what} {name!r} has leading/trailing whitespace or a leading dot")
     return name
+
+
+def write_artifact(out_dir: str, name: str, content: bytes) -> dict:
+    """Land ``content`` as ``out_dir/name`` and return its manifest
+    fields ``{"path", "size", "sha256"}``.
+
+    The bytes go to a temp file in ``out_dir`` first and reach the
+    final name by ``os.replace``, so readers see the whole artifact or
+    none of it. The temp name starts with a dot, which Spark's
+    ``binaryFile`` path filter and the Zarr readers skip, and any
+    failure removes it before re-raising."""
+    safe_component(name, "name")
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, name)
+    fd, tmp = tempfile.mkstemp(dir=out_dir, prefix=".", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "wb") as f:
+            f.write(content)
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        raise
+    return {"path": path, "size": len(content), "sha256": hashlib.sha256(content).hexdigest()}

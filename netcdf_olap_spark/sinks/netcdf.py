@@ -27,27 +27,27 @@ tested in tests/test_netcdf_sink.py):
   read time, so export∘ingest is the identity for ragged slices too.
 
 Scale: :func:`export_netcdf_files` has each task write its artifact to
-shared storage itself (exactly the reference's contract:
-Gddp.scala:235-236 writes the PNG from the task, not the driver) and
-only (path, size, checksum) manifest rows reach the driver, so a
-full-variable export at 100 TB never materializes a multi-GB blob in
-one Spark cell or on the driver. ``chunk`` splits large exports into
-one CF-consistent file per time window.
+shared storage itself through ``sinks/naming.write_artifact`` (exactly
+the reference's contract: Gddp.scala:235-236 writes the PNG from the
+task, not the driver) and only (path, size, sha256) manifest rows
+reach the driver, so a full-variable export at 100 TB never
+materializes a multi-GB blob in one Spark cell or on the driver.
+``chunk`` splits large exports into one CF-consistent file per time
+window.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from netcdf_olap_spark.sinks.naming import ARTIFACT_FIELDS
 
 NC_MANIFEST_SCHEMA = StructType(
     [
@@ -59,9 +59,7 @@ NC_MANIFEST_SCHEMA = StructType(
         StructField("ny", IntegerType()),
         StructField("nx", IntegerType()),
         StructField("n_valid", IntegerType()),
-        StructField("path", StringType()),
-        StructField("size", LongType()),
-        StructField("sha256", StringType()),
+        *ARTIFACT_FIELDS,
     ]
 )
 
@@ -171,7 +169,7 @@ def export_netcdf_files(
 ) -> DataFrame:
     """Long cube rows → one .nc file per (ds, variable[, time chunk]),
     each written to ``out_dir`` INSIDE its ``applyInPandas`` task —
-    atomically, via ``tempfile`` + ``os.replace`` — and only (path,
+    atomically, via ``sinks/naming.write_artifact`` — and only (path,
     size, sha256) manifest rows reach the driver. This is the
     reference's own sink contract (Gddp.scala:235-236 writes the PNG
     from the task, not the driver) and it removes both the 2 GB
@@ -215,12 +213,9 @@ def export_netcdf_files(
     dfp = df.withColumn("__part", part_col)
 
     def _write_file(pdf):
-        import hashlib
-        import tempfile
-
         import pandas as pd
 
-        from netcdf_olap_spark.sinks.naming import safe_component
+        from netcdf_olap_spark.sinks.naming import safe_component, write_artifact
 
         part = str(pdf["__part"].iloc[0])
         content, meta = _build_nc(pdf.drop(columns="__part"), fmt_, fill_, gzip_)
@@ -230,29 +225,6 @@ def export_netcdf_files(
         name = f"{meta['ds']}_{meta['variable']}_{part}_{fmt_}.nc" if part != "all" else (
             f"{meta['ds']}_{meta['variable']}_{fmt_}.nc"
         )
-        os.makedirs(out_, exist_ok=True)
-        final = os.path.join(out_, name)
-        fd, tmp = tempfile.mkstemp(dir=out_, suffix=".nc.tmp")
-        try:
-            with os.fdopen(fd, "wb") as f:
-                f.write(content)
-            os.replace(tmp, final)  # atomic: readers never see a partial file
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
-        return pd.DataFrame(
-            [
-                {
-                    **meta,
-                    "part": part,
-                    "path": final,
-                    "size": len(content),
-                    "sha256": hashlib.sha256(content).hexdigest(),
-                }
-            ]
-        )
+        return pd.DataFrame([{**meta, "part": part, **write_artifact(out_, name, content)}])
 
     return dfp.groupBy("ds", "variable", "__part").applyInPandas(_write_file, NC_MANIFEST_SCHEMA)

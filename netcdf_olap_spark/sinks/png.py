@@ -22,9 +22,9 @@ with quantile breaks, and writes ``gddp<variable><start>-<end>.png``
 
 Scale: :func:`render_png_files` writes each image to shared storage
 INSIDE the rendering task (the reference's own contract —
-Gddp.scala:235-236 writes the PNG from the task, not the driver) and
-returns only (path, size, checksum) manifest rows; image bytes never
-reach the driver.
+Gddp.scala:235-236 writes the PNG from the task, not the driver)
+through ``sinks/naming.write_artifact`` and returns only (path, size,
+sha256) manifest rows; image bytes never reach the driver.
 """
 
 from __future__ import annotations
@@ -33,13 +33,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from netcdf_olap_spark.sinks.naming import safe_component
+from netcdf_olap_spark.sinks.naming import ARTIFACT_FIELDS, safe_component
 
 PNG_MANIFEST_SCHEMA = StructType(
     [
@@ -48,9 +47,7 @@ PNG_MANIFEST_SCHEMA = StructType(
         StructField("height", IntegerType()),
         StructField("n_cells", IntegerType()),
         StructField("n_valid", IntegerType()),
-        StructField("path", StringType()),
-        StructField("size", LongType()),
-        StructField("sha256", StringType()),
+        *ARTIFACT_FIELDS,
     ]
 )
 
@@ -69,24 +66,25 @@ def png_filename(variable: str, start_date: str, end_date: str, prefix: str = "g
 
 def _make_renderer(shared_breaks, n_breaks, write_spec):
     """Build the per-group render function. Nested (not module-level)
-    so cloudpickle serializes it BY VALUE — executors need nothing on
-    PYTHONPATH for the PNG path (unlike the NetCDF sink, which ships
-    the package for its vendored writers).
+    so cloudpickle serializes the encoder and color mapping BY VALUE;
+    the task imports only the filename contract and the shared writer
+    from the package, which ``render_png_files`` ships to the workers
+    (as every sink does).
 
     ``write_spec`` = (out_dir, start_date, end_date, prefix): the task
-    writes the file (tempfile + os.replace, atomic) and returns one
-    manifest row (PNG_MANIFEST_SCHEMA)."""
+    names the file with :func:`png_filename`, lands it with
+    ``sinks/naming.write_artifact`` and returns one manifest row
+    (PNG_MANIFEST_SCHEMA)."""
 
     def _render(pdf):
-        import hashlib
-        import os
-        import re
         import struct
-        import tempfile
         import zlib
 
         import numpy as np
         import pandas as pd
+
+        from netcdf_olap_spark.sinks.naming import write_artifact
+        from netcdf_olap_spark.sinks.png import png_filename
 
         def encode_png(rgba: "np.ndarray") -> bytes:
             """Minimal RGBA8 PNG encoder (no deps)."""
@@ -162,26 +160,7 @@ def _make_renderer(shared_breaks, n_breaks, write_spec):
         rgba = rgba[::-1]  # vertical flip: row 0 = north (README.md:82 fixup)
         png = encode_png(np.ascontiguousarray(rgba))
         out_dir, start_date, end_date, prefix = write_spec
-        # inline twin of sinks.naming.safe_component (closure stays
-        # import-free on executors): reject traversal-capable names
-        for what, nm in (("variable", variable), ("prefix", prefix),
-                         ("start_date", start_date), ("end_date", end_date)):
-            if (not nm or re.search(r"[\x00-\x1f/\\]", nm) or ".." in nm
-                    or nm != nm.strip() or nm.startswith(".")):
-                raise ValueError(f"{what} {nm!r} is not a safe filename component")
-        os.makedirs(out_dir, exist_ok=True)
-        final = os.path.join(out_dir, f"{prefix}{variable}{start_date}-{end_date}.png")
-        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".png.tmp")
-        try:
-            with os.fdopen(fd, "wb") as f:
-                f.write(png)
-            os.replace(tmp, final)  # atomic: no partial files visible
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
+        name = png_filename(variable, start_date, end_date, prefix)
         return pd.DataFrame(
             [
                 {
@@ -190,9 +169,7 @@ def _make_renderer(shared_breaks, n_breaks, write_spec):
                     "height": h,
                     "n_cells": int(h * w),
                     "n_valid": int(finite.size),
-                    "path": final,
-                    "size": len(png),
-                    "sha256": hashlib.sha256(png).hexdigest(),
+                    **write_artifact(out_dir, name, png),
                 }
             ]
         )
@@ -224,16 +201,20 @@ def render_png_files(
 ) -> DataFrame:
     """Render one PNG per variable from a long (variable, y, x, value)
     DataFrame (already sliced/masked upstream). Each image is written
-    to ``out_dir`` inside its own rendering task (atomic tempfile +
-    ``os.replace``) with the reference's filename contract; only
-    (path, size, sha256) manifest rows reach the driver. ``out_dir``
-    must be visible to executors and driver (local mode / NFS / shared
-    volume)."""
+    to ``out_dir`` inside its own rendering task (atomically, by
+    ``sinks/naming.write_artifact``) with the reference's filename
+    contract; only (path, size, sha256) manifest rows reach the
+    driver. ``out_dir`` must be visible to executors and driver (local
+    mode / NFS / shared volume)."""
     # fail fast on the driver for caller-supplied components; variable
     # names (data-derived) are re-checked inside the task
     safe_component(prefix, "prefix")
     safe_component(start_date, "start_date")
     safe_component(end_date, "end_date")
+    # the task imports the filename contract and the shared writer
+    from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
+
+    ensure_package_on_workers(df.sparkSession)
     fn = _make_renderer(
         _shared_breaks(df, n_breaks, global_breaks),
         n_breaks,

@@ -4,12 +4,13 @@ Where the NetCDF sink must assemble one FILE per variable (a
 container format), Zarr's chunk-per-object layout lets every task
 write its own chunk objects directly: the sink partitions the cube
 by (variable, time-chunk), each ``applyInPandas`` task densifies its
-block and writes exactly one chunk object atomically (tempfile +
-``os.replace`` — the reference's write-from-the-task contract,
-Gddp.scala:235-236), and only manifest rows (path, bytes, sha256)
-reach the driver.  No single-cell artifact ceiling, no driver memory
-pressure, and appending a day at 100 TB is writing the new chunk
-objects plus one ``.zarray`` shape bump — never rewriting a file.
+block and writes exactly one chunk object atomically through
+``sinks/naming.write_artifact`` (the reference's write-from-the-task
+contract, Gddp.scala:235-236), and only manifest rows (path, size,
+sha256) reach the driver.  No single-cell artifact ceiling, no
+driver memory pressure, and appending a day at 100 TB is writing the
+new chunk objects plus one ``.zarray`` shape bump — never rewriting
+a file.
 
 Coordinate axes and array metadata are driver-side (axes are bounded
 by grid geometry, not cell count; the cell-coordinate collect is
@@ -26,14 +27,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-from netcdf_olap_spark.sinks.naming import safe_component
+from netcdf_olap_spark.sinks.naming import ARTIFACT_FIELDS, safe_component
 from netcdf_olap_spark.sources.netcdf import ensure_package_on_workers
 from netcdf_olap_spark.sources.zarr import (
     encode_chunk,
@@ -46,10 +46,8 @@ ZARR_MANIFEST_SCHEMA = StructType(
     [
         StructField("variable", StringType()),
         StructField("chunk", StringType()),
-        StructField("path", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("sha256", StringType()),
         StructField("n_valid", IntegerType()),
+        *ARTIFACT_FIELDS,
     ]
 )
 
@@ -149,12 +147,12 @@ def export_zarr_store(
     root_, chunks_, fill_ = root, chunks, float(fill_value)
 
     def _write(pdf):
-        import hashlib as _hashlib
         import os as _os
-        import tempfile as _tempfile
 
         import numpy as _np
         import pandas as _pd
+
+        from netcdf_olap_spark.sinks.naming import write_artifact
 
         var = pdf["variable"].iloc[0]
         slab = int(pdf["_slab"].iloc[0])
@@ -168,20 +166,13 @@ def export_zarr_store(
         ] = vals
         buf = encode_chunk(spec_, block)
         name = f"{slab}.0.0"
-        adir = _os.path.join(root_, var)
-        fd, tmp = _tempfile.mkstemp(dir=adir)
-        with _os.fdopen(fd, "wb") as fh:
-            fh.write(buf)
-        _os.replace(tmp, _os.path.join(adir, name))
         return _pd.DataFrame(
             [
                 {
                     "variable": var,
                     "chunk": name,
-                    "path": _os.path.join(adir, name),
-                    "n_bytes": len(buf),
-                    "sha256": _hashlib.sha256(buf).hexdigest(),
                     "n_valid": int((vals != fill_).sum()),
+                    **write_artifact(_os.path.join(root_, var), name, buf),
                 }
             ]
         )

@@ -69,7 +69,7 @@ def test_bench_final_line_is_bounded():
             "calib_scan_sec": 99.999,
             "ambient_probe_med": 99.999,
             "n_ambient_flagged": 9999,
-            "plan_fp_digest": "a" * 12,
+            "plan_fp2_digest": "a" * 12,
         }
     )
     assert len(line) < 800, len(line)
@@ -86,12 +86,18 @@ def test_plan_fingerprint2_strips_only_lambda_counters(spark):
     """Columns ``a_1`` / ``a_2`` stay distinct under ``plan_fp2``; two
     builds of one ``F.transform`` plan, whose lambda variables carry
     different session-counter names (``lambda x_N``), hash equal."""
-    from bench import plan_fingerprint, plan_fingerprint2
+    import re
+
+    from bench import plan_fingerprint2
 
     base = spark.range(3)
     assert plan_fingerprint2(base.selectExpr("id AS a_1")) != plan_fingerprint2(
         base.selectExpr("id AS a_2")
     )
     a, b = (base.select(F.transform(F.array("id"), lambda x: x + 1)) for _ in range(2))
-    assert plan_fingerprint(a) != plan_fingerprint(b)  # the counter moved
+    binders = [
+        re.findall(r"lambda x_\d+", df._jdf.queryExecution().executedPlan().toString())
+        for df in (a, b)
+    ]
+    assert binders[0] and binders[1] and binders[0] != binders[1]  # the counter moved
     assert plan_fingerprint2(a) == plan_fingerprint2(b)

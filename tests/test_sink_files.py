@@ -4,11 +4,12 @@ Three contracts under test:
 
 1. **Tasks write, driver collects manifests only** — export_netcdf_files
    / render_png_files write each artifact inside its applyInPandas task
-   (atomic tempfile + os.replace) and return (path, size, sha256) rows;
-   the bytes never ride in a Spark cell. A chunked export splits one
-   variable across multiple CF-consistent files, so no single task
-   ever builds the whole variable's cube (no 2 GB-cell or
-   driver-memory ceiling).
+   (atomically, through sinks/naming.write_artifact) and return
+   (path, size, sha256) rows; the bytes never ride in a Spark cell. A
+   chunked export splits one variable across multiple CF-consistent
+   files, so no single task ever builds the whole variable's cube (no
+   2 GB-cell or driver-memory ceiling). A failed write leaves no temp
+   file behind.
 2. **Hostile names can't escape** — the vendored readers accept
    arbitrary bytes as dataset/variable names, so every sink filename
    component is validated (sinks/naming.safe_component); traversal
@@ -107,6 +108,47 @@ def test_no_tmp_litter_after_export(spark, tmp_path):
     out = str(tmp_path / "clean")
     export_netcdf_files(_cube_df(spark, seed=23), out, fmt="hdf5").collect()
     assert all(not f.endswith(".tmp") for f in os.listdir(out))
+
+
+@pytest.mark.parametrize("sink", ["png", "netcdf", "geotiff", "zarr"])
+def test_failed_write_leaves_no_temp_file(spark, tmp_path, sink):
+    """A write that fails at its final rename (a directory squats on
+    the artifact's path) leaves nothing of its own behind: the
+    directory holds only the blocker (plus the Zarr array's own
+    ``.zarray``). For Zarr, a leftover chunk temp would also break
+    every later ingest of the store, so the store is re-exported
+    without the blocker and read back."""
+    from pyspark.sql import functions as F
+
+    from netcdf_olap_spark.sinks.geotiff import export_geotiff_files
+    from netcdf_olap_spark.sinks.zarr import export_zarr_store
+    from netcdf_olap_spark.sources.zarr import ingest_zarr_store
+
+    # one day, so each sink writes exactly one artifact
+    cube = _cube_df(spark, seed=37).where(F.col("time") < F.lit("1990-01-02"))
+    out = tmp_path / "out"
+    export, where, blocker, own = {
+        "png": (
+            lambda: render_png_files(cube, str(out), "1990-01-01", "1990-01-01"),
+            out, png_filename("tas", "1990-01-01", "1990-01-01"), set(),
+        ),
+        "netcdf": (
+            lambda: export_netcdf_files(cube, str(out), fmt="classic"),
+            out, "exp_tas_classic.nc", set(),
+        ),
+        "geotiff": (lambda: export_geotiff_files(cube, str(out)), out, "tas_1990-01-01.tif", set()),
+        "zarr": (lambda: export_zarr_store(cube, str(out)), out / "tas", "0.0.0", {".zarray"}),
+    }[sink]
+    (where / blocker).mkdir(parents=True)
+    with pytest.raises(Exception):
+        export().collect()
+    assert set(os.listdir(where)) == {blocker} | own
+    assert not any((where / blocker).iterdir())
+    if sink == "zarr":
+        (where / blocker).rmdir()
+        export().collect()
+        back = ingest_zarr_store(spark, str(out), ds="exp").select(*cube.columns)
+        assert _rows(back) == _rows(cube)
 
 
 # -- 2. hostile names -------------------------------------------------------

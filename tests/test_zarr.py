@@ -147,7 +147,7 @@ def test_export_store_manifest_and_spec(spark, tmp_path):
     assert {m["chunk"] for m in manifest} == {"0.0.0", "1.0.0", "2.0.0"}
     for m in manifest:
         blob = open(m["path"], "rb").read()
-        assert len(blob) == m["n_bytes"]
+        assert len(blob) == m["size"]
         assert hashlib.sha256(blob).hexdigest() == m["sha256"]
     meta = json.load(open(os.path.join(root, "lat", ".zarray")))
     assert meta["shape"] == [4, 5]

@@ -3,7 +3,8 @@ bench): runs the named registry queries with the noop sink, REPS reps
 each, prints min/median per query. min-of-reps is the
 noise-robust statistic for DECISION-MAKING on a machine with
 host-level contention spikes; the official bench.py keeps its
-median-of-reps contract.
+median-of-reps contract. The warm-up and the between-rep unpersist
+are bench.py's own (``warm_up``, ``unpersist_all``).
 
 CLI: python tools/qtime.py <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, QTIME_REPS (default 3)
@@ -15,13 +16,13 @@ import os
 import sys
 import time
 
-import pandas as pd
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
+
+from bench import unpersist_all, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -36,32 +37,17 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
 
-    # same process warmup as bench.py, abridged
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType
-
-    warm = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    warm.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
-
-    @F.pandas_udf(DoubleType())
-    def _warm_udf(v: pd.Series) -> pd.Series:
-        return v * 1.0
-
-    warm.limit(1000).select(_warm_udf(F.col("l_quantity"))).collect()
+    warm_up(spark, sf_dir)
 
     for name in names:
         fn = registry[name]
         samples = []
         for _ in range(reps):
-            load0 = os.getloadavg()[0]
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
-            # free accumulated localCheckpoint blocks between reps
-            for _, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-                rdd.unpersist()
-            _ = load0
+            unpersist_all(spark)  # free localCheckpoint blocks between reps
         mn = min(samples)
         med = sorted(samples)[len(samples) // 2]
         print(f"{name:38s} min={mn:7.3f} med={med:7.3f} runs={samples} load={os.getloadavg()[0]:.1f}", flush=True)

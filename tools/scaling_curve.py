@@ -27,6 +27,8 @@ if REPO not in sys.path:
 
 os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
 
+from bench import unpersist_all  # noqa: E402
+
 QUERIES = [
     "q1_pricing_summary",
     "q21_lone_late_supplier",
@@ -248,6 +250,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 registry[name](spark, d).write.format("noop").mode("overwrite").save()
                 samples.append(round(time.perf_counter() - t0, 3))
+            unpersist_all(spark)  # as bench.py: free localCheckpoint blocks per query
             out.setdefault(name, {})[sf] = sorted(samples)[len(samples) // 2]
     os.environ.pop("SPARK_GRAFT_GRID_PATH", None)
 
