@@ -416,7 +416,7 @@ def main() -> None:
     calibration_scan()
     calibration_quick()
 
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    reps = bench_reps()
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
@@ -434,15 +434,7 @@ def main() -> None:
             "probe": calibration_quick(),
             "load1": round(os.getloadavg()[0], 2),
         }
-        fn = registry[name]
-        samples = []
-        df = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        unpersist_all(spark)
+        samples, df = time_reps(spark, registry[name], sf_dir, reps)
         runs[name] = samples
         timings[name] = sorted(samples)[len(samples) // 2]  # median
         mins[name] = min(samples)
@@ -598,6 +590,26 @@ def warm_up(spark, sf_dir: str) -> None:
     ).collect()
     tiny = spark.range(100).withColumnRenamed("id", "l_orderkey")
     warm.limit(5000).join(F.broadcast(tiny), "l_orderkey").count()
+
+
+def bench_reps() -> int:
+    """Timed reps per query: ``SPARK_GRAFT_BENCH_REPS``, default 3."""
+    return max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+
+
+def time_reps(spark, fn, sf_dir: str, reps: int):
+    """Run ``fn(spark, sf_dir)`` ``reps`` times through the ``noop``
+    sink; return the per-rep wall seconds and the last rep's DataFrame.
+    The reps' localCheckpoint/persist blocks are freed afterwards."""
+    samples = []
+    df = None
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        samples.append(round(time.perf_counter() - t0, 3))
+    unpersist_all(spark)
+    return samples, df
 
 
 def unpersist_all(spark) -> None:

@@ -847,6 +847,21 @@ INGEST_NT, INGEST_NY, INGEST_NX = 6, 4, 5
 INGEST_FILL = -9999.0
 
 
+def _sync_file(path: str, content: bytes) -> None:
+    """Land a fixture file's deterministic bytes at ``path`` unless the
+    file already holds exactly them, so re-runs and concurrent sessions
+    rewrite nothing."""
+    import os
+
+    from netcdf_olap_spark.sinks.naming import land
+
+    if os.path.exists(path):
+        with open(path, "rb") as fh:
+            if fh.read() == content:
+                return
+    land(path, content)
+
+
 def _ingest_fixture_dir() -> str:
     """Write the two-format .nc fixture directory and return its path.
 
@@ -960,15 +975,7 @@ def _ingest_fixture_dir() -> str:
         ),
     }
     for name, content in targets.items():
-        path = os.path.join(d, name)
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                if fh.read() == content:
-                    continue
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(content)
-        os.replace(tmp, path)
+        _sync_file(os.path.join(d, name), content)
     return d
 
 
@@ -1080,7 +1087,7 @@ def _export_roundtrip_lazy(spark: SparkSession) -> DataFrame:
     # session.fresh_invocation_dir
     out = fresh_invocation_dir("nolap_export_rt")
     # executor-side sink: tasks write the .nc files atomically
-    # (tempfile + os.replace) and return only manifest rows
+    # (sinks/naming.write_artifact) and return only manifest rows
     export_netcdf_files(sel, out, fmt="hdf5", gzip=6).collect()
     back = ingest_directory(spark, out, ds="roundtrip")
     return (
@@ -2248,18 +2255,8 @@ def _zarr_fixture_dir() -> str:
             tgt = d if rel == "." else os.path.join(d, rel)
             os.makedirs(tgt, exist_ok=True)
             for name in names:
-                src = os.path.join(root, name)
-                dst = os.path.join(tgt, name)
-                with open(src, "rb") as fh:
-                    content = fh.read()
-                if os.path.exists(dst):
-                    with open(dst, "rb") as fh:
-                        if fh.read() == content:
-                            continue
-                fd, tmp = tempfile.mkstemp(dir=tgt)
-                with os.fdopen(fd, "wb") as fh:
-                    fh.write(content)
-                os.replace(tmp, dst)
+                with open(os.path.join(root, name), "rb") as fh:
+                    _sync_file(os.path.join(tgt, name), fh.read())
     finally:
         shutil.rmtree(stage, ignore_errors=True)
     return d
@@ -2389,15 +2386,7 @@ def _geotiff_fixture_dir() -> str:
             ),
         }
         for name, content in targets.items():
-            path = os.path.join(d, name)
-            if os.path.exists(path):
-                with open(path, "rb") as fh:
-                    if fh.read() == content:
-                        continue
-            fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-            with os.fdopen(fd, "wb") as fh:
-                fh.write(content)
-            os.replace(tmp, path)
+            _sync_file(os.path.join(d, name), content)
     return d
 
 

@@ -13,6 +13,8 @@ through :func:`safe_component` before touching a filesystem or zip.
 Every sink task hands its encoded bytes to :func:`write_artifact`,
 which lands them atomically and returns the manifest's
 :data:`ARTIFACT_FIELDS`; no sink writes a file any other way.
+:func:`land` is its name-agnostic landing step, also used by the
+registry's fixture directories and the shipped package zip.
 """
 
 from __future__ import annotations
@@ -52,19 +54,13 @@ def safe_component(name: str, what: str = "name") -> str:
     return name
 
 
-def write_artifact(out_dir: str, name: str, content: bytes) -> dict:
-    """Land ``content`` as ``out_dir/name`` and return its manifest
-    fields ``{"path", "size", "sha256"}``.
-
-    The bytes go to a temp file in ``out_dir`` first and reach the
-    final name by ``os.replace``, so readers see the whole artifact or
-    none of it. The temp name starts with a dot, which Spark's
-    ``binaryFile`` path filter and the Zarr readers skip, and any
-    failure removes it before re-raising."""
-    safe_component(name, "name")
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, name)
-    fd, tmp = tempfile.mkstemp(dir=out_dir, prefix=".", suffix=".tmp")
+def land(path: str, content: bytes) -> None:
+    """Write ``content`` to ``path`` so readers see the whole file or
+    none of it: the bytes go to a temp file in the same directory first
+    and reach ``path`` by ``os.replace``. The temp name starts with a
+    dot, which Spark's ``binaryFile`` path filter and the Zarr readers
+    skip, and any failure removes it before re-raising."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".tmp")
     try:
         with os.fdopen(fd, "wb") as f:
             f.write(content)
@@ -75,4 +71,13 @@ def write_artifact(out_dir: str, name: str, content: bytes) -> dict:
         except OSError:
             pass
         raise
+
+
+def write_artifact(out_dir: str, name: str, content: bytes) -> dict:
+    """Check ``name``, :func:`land` ``content`` as ``out_dir/name`` and
+    return its manifest fields ``{"path", "size", "sha256"}``."""
+    safe_component(name, "name")
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, name)
+    land(path, content)
     return {"path": path, "size": len(content), "sha256": hashlib.sha256(content).hexdigest()}

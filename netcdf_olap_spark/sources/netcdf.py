@@ -337,11 +337,13 @@ def _package_zip() -> str:
     stale /tmp copy from an older version can never shadow current
     code, and the fixed timestamps give identical bytes per hash."""
     import hashlib
+    import io
     import os
     import tempfile
     import zipfile
 
     import netcdf_olap_spark
+    from netcdf_olap_spark.sinks.naming import land
 
     pkg_root = os.path.dirname(netcdf_olap_spark.__file__)
     files = []
@@ -358,14 +360,13 @@ def _package_zip() -> str:
             h.update(fh.read())
     dst = os.path.join(tempfile.gettempdir(), f"netcdf_olap_spark_{h.hexdigest()[:16]}.zip")
     if not os.path.exists(dst):
-        fd, tmp = tempfile.mkstemp(dir=tempfile.gettempdir(), suffix=".zip")
-        os.close(fd)
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
             for rel, full in files:
                 with open(full, "rb") as fh:
                     info = zipfile.ZipInfo(rel, date_time=(1990, 1, 1, 0, 0, 0))
                     zf.writestr(info, fh.read())
-        os.replace(tmp, dst)
+        land(dst, buf.getvalue())
     return dst
 
 

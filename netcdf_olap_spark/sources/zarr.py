@@ -1,5 +1,5 @@
 """Vendored Zarr v2 format: store reader/writer, distributed cube
-ingest, and the ``zarr_cube`` Spark DataSource.
+ingest, and the ``zarr_cube`` streaming DataSource.
 
 Zarr v2 (public spec, zarr-specs.readthedocs.io/en/latest/v2/v2.0.html)
 is the cloud-native array layout the climate community pairs with
@@ -19,8 +19,7 @@ container (no wheels) and raise cleanly.  Vendored from the spec,
 not from zarr-python.
 
 One implementation of each piece of the format serves every caller
-(batch ingest, the DataSource, the stream reader, the writer and
-sinks/zarr.py):
+(batch ingest, the stream reader, the writer and sinks/zarr.py):
 
 - ``_check_meta`` / ``write_zarray``: metadata validation and the
   ``.zarray`` builder;
@@ -32,16 +31,14 @@ sinks/zarr.py):
 - ``chunk_rows``: one chunk's bytes (``None`` for an absent chunk) →
   long GRID rows.
 
-Two batch distribution strategies sit on top, both kept because they
-measure differently (the fixture store, 4 cores: binaryFile ingest
-4 partitions, ~1.3 s; the DataSource 28 partitions, ~4.9 s):
+Two distribution forms sit on top:
 
-- ``ingest_zarr_store`` — ``binaryFile`` + ``mapInPandas``; Spark packs
-  chunk objects into file splits (4 tasks for the fixture's 28
-  chunks), the scale path;
-- ``spark.read.format("zarr_cube")`` — one input partition per
-  (variable, chunk object), the live-query form; its streaming form
-  turns arriving chunk objects into micro-batches.
+- ``ingest_zarr_store`` — the one batch read: ``binaryFile`` +
+  ``mapInPandas``; Spark packs chunk objects into file splits (4 tasks
+  for the fixture's 28 chunks);
+- ``spark.readStream.format("zarr_cube")`` — arriving chunk objects
+  become micro-batches.  A batch ``spark.read.format("zarr_cube")`` is
+  not supported.
 
 SELF-CONTAINMENT: Spark's streaming Python source planner
 (``python_streaming_source_runner``) deserializes the stream reader
@@ -65,12 +62,7 @@ from itertools import product
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -412,26 +404,14 @@ def ingest_zarr_store(spark: SparkSession, root: str, ds: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# the zarr_cube DataSource (batch + chunk-arrival streaming)
+# the zarr_cube DataSource (chunk-arrival streaming only)
 # ---------------------------------------------------------------------------
 
 
-class ZarrChunkPartition(InputPartition):
-    """One (variable, chunk object) decode unit.  ``absent=True``
-    marks a chunk the store omits (spec: all-fill) — the reader
-    synthesizes its rows instead of opening a file."""
-
-    def __init__(self, path: str, ds: str, variable: str, meta: tuple, absent: bool = False):
-        self.path = path
-        self.ds = ds
-        self.variable = variable
-        self.meta = meta  # spec: (chunks, shape, dtype, compressed, fill)
-        self.absent = absent
-
-
 class ZarrCubeDataSource(DataSource):
-    """Options: ``path`` (store root), ``ds`` (dataset id, default
-    dir name), ``variables`` (comma allowlist — partition pruning)."""
+    """``spark.readStream.format("zarr_cube")``.  Options: ``path``
+    (store root), ``ds`` (dataset id, default dir name), ``variables``
+    (comma allowlist).  Batch reads go through ``ingest_zarr_store``."""
 
     @classmethod
     def name(cls) -> str:
@@ -440,15 +420,17 @@ class ZarrCubeDataSource(DataSource):
     def schema(self) -> str:
         return GRID_SCHEMA
 
-    def reader(self, schema) -> "ZarrCubeReader":
-        return ZarrCubeReader(self.options)
-
     def simpleStreamReader(self, schema) -> "ZarrCubeStreamReader":
         return ZarrCubeStreamReader(self.options)
 
 
-class ZarrCubeReader(DataSourceReader):
-    def __init__(self, options: dict, strict_time: bool = True):
+class ZarrCubeReader:
+    """The stream's options plus one snapshot of the store's metadata
+    and coordinate axes (``read_store`` with ``strict_time=False``: a
+    stream can observe the time axis extended before a variable's
+    shape bump)."""
+
+    def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("zarr_cube: path is required")
@@ -457,9 +439,9 @@ class ZarrCubeReader(DataSourceReader):
         self.variables: Sequence[str] | None = (
             [v.strip() for v in raw.split(",") if v.strip()] if raw else None
         )
-        # planning-time metadata + coordinate axes: tiny, pickled to
-        # tasks with the reader (the mapInPandas closure-capture rule)
-        self.time_us, self.lat2d, self.lon2d, self.metas = read_store(self.path, strict_time)
+        self.time_us, self.lat2d, self.lon2d, self.metas = read_store(
+            self.path, strict_time=False
+        )
 
     def _chunk_files(self, var: str) -> list[str]:
         return sorted(
@@ -467,41 +449,6 @@ class ZarrCubeReader(DataSourceReader):
             for f in glob.glob(os.path.join(self.path, var, "*"))
             if not os.path.basename(f).startswith(".")
         )
-
-    def partitions(self) -> list[ZarrChunkPartition]:
-        parts = []
-        for var, spec in sorted(self.metas.items()):
-            if self.variables is not None and var not in self.variables:
-                continue  # partition-level variable pruning
-            for key, present in _chunk_objects(self.path, var, spec):
-                parts.append(
-                    ZarrChunkPartition(
-                        os.path.join(self.path, var, key), self.ds, var, spec, absent=not present
-                    )
-                )
-        if not parts:
-            raise FileNotFoundError(f"zarr_cube: no data chunks under {self.path}")
-        return parts
-
-    def read(self, partition: ZarrChunkPartition) -> Iterator:
-        import pyarrow as pa
-
-        content = None
-        if not partition.absent:
-            with open(partition.path, "rb") as fh:
-                content = fh.read()
-        pdf = chunk_rows(
-            partition.ds,
-            partition.variable,
-            partition.meta,
-            _cidx(os.path.basename(partition.path)),
-            content,
-            self.time_us,
-            self.lat2d,
-            self.lon2d,
-        )
-        table = pa.Table.from_pandas(pdf, preserve_index=False)
-        yield from table.to_batches(max_chunksize=10_000)
 
 
 class ZarrCubeStreamReader(SimpleDataSourceStreamReader):
@@ -532,7 +479,7 @@ class ZarrCubeStreamReader(SimpleDataSourceStreamReader):
         self.options = dict(options)
 
     def _reader(self) -> ZarrCubeReader:
-        return ZarrCubeReader(self.options, strict_time=False)
+        return ZarrCubeReader(self.options)
 
     def initialOffset(self) -> dict:
         return {"chunks": []}
@@ -547,7 +494,8 @@ class ZarrCubeStreamReader(SimpleDataSourceStreamReader):
 
     def _rows_for(self, rd: ZarrCubeReader, files: list[str], nt_cap: int):
         def _py(x):
-            # tuple-path conversions the Arrow batch path gets free
+            # the tuple path gets no Arrow conversion: NaN→NULL and
+            # numpy→Python scalars are done here
             if x is None or (isinstance(x, float) and x != x):
                 return None
             if isinstance(x, np.integer):

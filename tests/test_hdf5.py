@@ -509,8 +509,8 @@ def test_ingest_directory_mixed_formats(spark, tmp_path):
 
 def test_cube_stream_mixed_nc_formats(spark, tmp_path):
     """Streaming directory scan over REAL .nc arrivals, one classic
-    and one HDF5 file: each lands as a micro-batch with
-    rows equal to the batch ingest of the same bytes."""
+    and one HDF5 file: each lands as a micro-batch, and the stream's
+    rows equal ``ingest_directory``'s over the same files."""
     from pyspark.sql import functions as F
 
     from netcdf_olap_spark.sources.netcdf_datasource import register
@@ -555,30 +555,14 @@ def test_cube_stream_mixed_nc_formats(spark, tmp_path):
         assert out.count() == 2 * d1.size
         assert out.where(F.col("value").isNull()).count() == 4  # 2 fills per file
         assert out.select(F.countDistinct("time")).first()[0] == 2 * NT
+        # same decoder as the batch ingest: row-for-row equal
+        want = src.ingest_directory(spark, str(d), ds="live")
+        key = ["variable", "time", "y", "x"]
+        assert [tuple(r) for r in out.orderBy(*key).collect()] == [
+            tuple(r) for r in want.orderBy(*key).collect()
+        ]
     finally:
         q.stop()
-
-
-def test_python_datasource_hdf5_decoder(spark, tmp_path):
-    """format('netcdf_cube') reads a NetCDF-4 file —
-    same rows as the mapInPandas ingest path."""
-    from netcdf_olap_spark.sources import netcdf_datasource as nds
-
-    d1, th, lat, lon = _cube(9)
-    (tmp_path / "a.nc").write_bytes(_h5_bytes(d1, th, lat, lon, chunks={"tas": (2, 3, 5)}, gzip=1))
-
-    nds.register(spark)
-    got = (
-        spark.read.format("netcdf_cube")
-        .option("ds", "dh5")
-        .option("pattern", "*.nc")
-        .load(str(tmp_path))
-    )
-    want = src.ingest_directory(spark, str(tmp_path), ds="dh5")
-    key = ["variable", "time", "y", "x"]
-    assert [tuple(r) for r in got.orderBy(*key).collect()] == [
-        tuple(r) for r in want.orderBy(*key).collect()
-    ]
 
 
 # ---------------------------------------------------------------------------

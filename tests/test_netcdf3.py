@@ -214,28 +214,6 @@ def test_netcdf3_decoder_matches_reference_semantics():
     assert got["time"].min() == pd.Timestamp("1990-01-01")
 
 
-def test_python_datasource_nc3_decoder(spark, tmp_path):
-    """format('netcdf_cube') reads genuine classic
-    .nc files — same rows as the mapInPandas ingest path."""
-    from netcdf_olap_spark.sources import netcdf_datasource as nds
-
-    d1, th, lat, lon = _cube(1)
-    (tmp_path / "a.nc").write_bytes(_nc_bytes(d1, th, lat, lon))
-
-    nds.register(spark)
-    got = (
-        spark.read.format("netcdf_cube")
-        .option("ds", "dnc")
-        .option("pattern", "*.nc")
-        .load(str(tmp_path))
-    )
-    want = src.ingest_directory(spark, str(tmp_path), ds="dnc")
-    key = ["variable", "time", "y", "x"]
-    assert [tuple(r) for r in got.orderBy(*key).collect()] == [
-        tuple(r) for r in want.orderBy(*key).collect()
-    ]
-
-
 def test_ingest_directory_real_nc_files(spark, tmp_path):
     """End-to-end S1: genuine classic-format .nc files through the
     default decoder path — binaryFile →

@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from netcdf_olap_spark.sources import netcdf as src
-from netcdf_olap_spark.sources.hdf5 import write_hdf5
 from netcdf_olap_spark.sources.netcdf3 import write_netcdf3
 
 NT, NY, NX = 4, 5, 6
@@ -89,6 +88,12 @@ def test_ingest_directory_distributed(spark, tmp_path):
     assert df.select("time").distinct().count() == 2 * NT
     assert df.where(F.col("value").isNull()).count() == 4
 
+    # the variables allowlist keeps only the listed variables of a file
+    (tmp_path / "c.nc").write_bytes(_nc_bytes(th + 2 * NT * 24, lat, lon, tas=d1, pr=d2))
+    pr = src.ingest_directory(spark, str(tmp_path), ds="d1", variables=["pr"])
+    assert pr.select("variable").distinct().collect() == [("pr",)]
+    assert pr.count() == NT * NY * NX
+
 
 def test_ingest_directory_default_decoder_is_real_nc(spark, tmp_path):
     """Bytes that are not HDF5 go to the vendored classic reader,
@@ -140,71 +145,6 @@ def test_catalog_and_overlap(spark):
     assert hit == {"pr"}
     hit = {r["variable"] for r in src.overlapping_variables(cat, "1990-01-01", "1990-01-20").collect()}
     assert hit == {"tas", "pr"}
-
-
-def test_python_datasource_matches_mapinpandas_ingest(spark, tmp_path):
-    """The Spark-4 Python DataSource path (one input partition per
-    (file, variable)) must yield exactly the rows the
-    binaryFile+mapInPandas path yields."""
-    from netcdf_olap_spark.sources import netcdf_datasource as nds
-
-    d1, th, lat, lon = _cube(1)
-    d2, _, _, _ = _cube(2)
-    (tmp_path / "a.nc").write_bytes(_nc_bytes(th, lat, lon, tas=d1, pr=d2))
-    (tmp_path / "b.nc").write_bytes(_nc_bytes(th + NT * 24, lat, lon, tas=d2))
-
-    nds.register(spark)
-    got = (
-        spark.read.format("netcdf_cube")
-        .option("ds", "dtest")
-        .load(str(tmp_path))
-    )
-    want = src.ingest_directory(spark, str(tmp_path), ds="dtest")
-    key = ["variable", "time", "y", "x"]
-    assert got.count() == want.count() == 2 * NT * NY * NX + NT * NY * NX
-    g = [tuple(r) for r in got.orderBy(*key).collect()]
-    w = [tuple(r) for r in want.orderBy(*key).collect()]
-    assert g == w
-    # variable allowlist prunes whole partitions at planning time
-    pruned = (
-        spark.read.format("netcdf_cube")
-        .option("ds", "dtest")
-        .option("variables", "tas")
-        .load(str(tmp_path))
-    )
-    assert pruned.select("variable").distinct().collect() == [("tas",)]
-
-
-def test_python_datasource_default_options_read_mixed_nc(spark, tmp_path):
-    """``load(dir)`` with no options reads a directory of .nc files of
-    both formats and yields exactly the ``ingest_directory`` rows, with
-    ``ds`` defaulting to the directory name."""
-    from netcdf_olap_spark.sources import netcdf_datasource as nds
-
-    d = tmp_path / "mixed"
-    d.mkdir()
-    d1, th, lat, lon = _cube(1)
-    d2, _, _, _ = _cube(2)
-    (d / "classic.nc").write_bytes(_nc_bytes(th, lat, lon, tas=d1))
-    (d / "modern.nc").write_bytes(
-        write_hdf5(
-            {
-                "time": ((th + NT * 24).astype("<i4"), {"long_name": "time"}),
-                "lat": (lat, {"long_name": "latitude coordinate"}),
-                "lon": (lon, {"long_name": "longitude coordinate"}),
-                "tas": (d2, {"_FillValue": FILL}),
-            }
-        )
-    )
-
-    nds.register(spark)
-    got = spark.read.format("netcdf_cube").load(str(d))
-    want = src.ingest_directory(spark, str(d), ds="mixed")
-    key = ["variable", "time", "y", "x"]
-    g = [tuple(r) for r in got.orderBy(*key).collect()]
-    assert g == [tuple(r) for r in want.orderBy(*key).collect()]
-    assert len(g) == 2 * NT * NY * NX and {r[0] for r in g} == {"mixed"}
-    assert sum(r[-1] is None for r in g) == 4  # 2 fill cells per file
 
 
 def test_cube_stream_ingests_arriving_files(spark, tmp_path):

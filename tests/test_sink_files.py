@@ -8,8 +8,8 @@ Three contracts under test:
    (path, size, sha256) rows; the bytes never ride in a Spark cell. A
    chunked export splits one variable across multiple CF-consistent
    files, so no single task ever builds the whole variable's cube (no
-   2 GB-cell or driver-memory ceiling). A failed write leaves no temp
-   file behind.
+   2 GB-cell or driver-memory ceiling). A failed write, a sink's or a
+   registry fixture's, leaves no temp file behind.
 2. **Hostile names can't escape** — the vendored readers accept
    arbitrary bytes as dataset/variable names, so every sink filename
    component is validated (sinks/naming.safe_component); traversal
@@ -149,6 +149,27 @@ def test_failed_write_leaves_no_temp_file(spark, tmp_path, sink):
         export().collect()
         back = ingest_zarr_store(spark, str(out), ds="exp").select(*cube.columns)
         assert _rows(back) == _rows(cube)
+
+
+@pytest.mark.parametrize(
+    "fixture", ["_ingest_fixture_dir", "_zarr_fixture_dir", "_geotiff_fixture_dir"]
+)
+def test_failed_fixture_write_leaves_no_file(tmp_path, monkeypatch, fixture):
+    """The registry's fixture directories land their files through the
+    sinks' landing step: a write that fails after its temp file exists
+    (here, at the rename) leaves no file behind."""
+    import tempfile
+
+    from netcdf_olap_spark.queries import grid
+
+    def _refuse(src, dst):
+        raise OSError("rename refused")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(os, "replace", _refuse)
+    with pytest.raises(OSError, match="rename refused"):
+        getattr(grid, fixture)()
+    assert [n for _, _, names in os.walk(tmp_path) for n in names] == []
 
 
 # -- 2. hostile names -------------------------------------------------------

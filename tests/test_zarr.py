@@ -182,29 +182,6 @@ def _mini_store(root, nt=4):
     return cube
 
 
-def test_zarr_datasource_matches_ingest(spark, tmp_path):
-    """format('zarr_cube') == ingest_zarr_store row for row, and the
-    variables option prunes partitions at planning time."""
-    from netcdf_olap_spark.sources.zarr import ZarrCubeReader, register
-
-    root = str(tmp_path / "store")
-    _mini_store(root)
-    register(spark)
-    via_ds = (
-        spark.read.format("zarr_cube").options(path=root, ds="t").load().orderBy("time", "y", "x")
-    )
-    via_ingest = zr.ingest_zarr_store(spark, root, ds="t").orderBy("time", "y", "x")
-    assert [tuple(r) for r in via_ds.collect()] == [tuple(r) for r in via_ingest.collect()]
-
-    rd = ZarrCubeReader({"path": root, "variables": "nope"})
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        rd.partitions()
-    # 4 time steps / chunk_t=2 → 2 slabs × (2y/2 → 1) × (3x/2 → 2) = 4 chunks
-    assert len(ZarrCubeReader({"path": root}).partitions()) == 4
-
-
 def test_zarr_stream_ingests_arriving_chunks(spark, tmp_path):
     """readStream.format('zarr_cube'): chunk objects landing in the
     store appear as micro-batches; an APPEND (new chunk files + a
@@ -264,11 +241,9 @@ def test_zarr_stream_ingests_arriving_chunks(spark, tmp_path):
 
 def test_absent_chunk_ingests_as_fill_rows(spark, tmp_path):
     """Spec: an omitted chunk object means all-fill (zarr-python's
-    write_empty_chunks=False) — BOTH distributed paths must emit its
+    write_empty_chunks=False) — the distributed ingest must emit its
     cells as NULL rows, matching the driver-side reader, instead of
     silently dropping them (review finding)."""
-    from netcdf_olap_spark.sources.zarr import register
-
     root = str(tmp_path / "store")
     _mini_store(root)
     os.remove(os.path.join(root, "v", "1.0.1"))  # t 2-3, x 2
@@ -284,11 +259,6 @@ def test_absent_chunk_ingests_as_fill_rows(spark, tmp_path):
         (4, 0, 2),
         (4, 1, 2),
     }
-
-    register(spark)
-    via_ds = spark.read.format("zarr_cube").options(path=root, ds="t").load()
-    assert via_ds.count() == 24
-    assert via_ds.where("value IS NULL").count() == 5
 
 
 def test_stream_defers_chunk_until_shape_bump(spark, tmp_path):
@@ -372,11 +342,11 @@ def _break_var_grid_shape(root):
     ],
     ids=["missing-lat", "2d-coord-shapes", "var-grid-shape"],
 )
-def test_invalid_store_rejected_by_both_batch_readers(spark, tmp_path, breakage, message):
+def test_invalid_store_rejected_by_ingest_and_stream_reader(spark, tmp_path, breakage, message):
     """A store whose coordinates and data variables disagree raises
-    ValueError through ingest_zarr_store AND format('zarr_cube') —
-    one validation (read_store) behind both batch paths."""
-    from netcdf_olap_spark.sources.zarr import ZarrCubeReader, register
+    ValueError through ingest_zarr_store AND the stream reader's store
+    snapshot — one validation (read_store) behind both."""
+    from netcdf_olap_spark.sources.zarr import ZarrCubeReader
 
     root = str(tmp_path / "store")
     _mini_store(root)
@@ -385,16 +355,13 @@ def test_invalid_store_rejected_by_both_batch_readers(spark, tmp_path, breakage,
         zr.ingest_zarr_store(spark, root, ds="t")
     with pytest.raises(ValueError, match=message):
         ZarrCubeReader({"path": root})
-    register(spark)
-    with pytest.raises(Exception, match=f"ValueError: .*{message}"):
-        spark.read.format("zarr_cube").options(path=root, ds="t").load().collect()
 
 
-def test_stream_reader_accepts_time_axis_ahead_of_shape(tmp_path):
+def test_stream_reader_accepts_time_axis_ahead_of_shape(spark, tmp_path):
     """The stream reader may observe an extended time axis before a
-    variable's .zarray shape bump (the append race); the batch reader
+    variable's .zarray shape bump (the append race); the batch ingest
     rejects the same store."""
-    from netcdf_olap_spark.sources.zarr import ZarrCubeReader, ZarrCubeStreamReader
+    from netcdf_olap_spark.sources.zarr import ZarrCubeStreamReader
 
     root = str(tmp_path / "store")
     _mini_store(root, nt=4)
@@ -404,4 +371,4 @@ def test_stream_reader_accepts_time_axis_ahead_of_shape(tmp_path):
     rd = ZarrCubeStreamReader({"path": root})._reader()
     assert len(rd.time_us) == 6 and rd.metas["v"][1] == (4, 2, 3)
     with pytest.raises(ValueError, match="coord axes"):
-        ZarrCubeReader({"path": root})
+        zr.ingest_zarr_store(spark, root, ds="t")

@@ -3,11 +3,12 @@ expensive headline queries across scale factors, so superlinear
 growth is a recorded number instead of an argument. Run
 tools/gen_scale.py first to materialize the amplified sf1.0 dir.
 
-Each query runs REPS times per scale factor (median reported) through
-the same noop-sink protocol as bench.py. Output: one JSON line with
-per-query medians per sf + the growth exponent alpha fitted between
-the two largest scale factors (time ~ N^alpha; alpha <= ~1.1 is the
-linear-ish band, >1.3 flags superlinear growth worth explaining).
+Each query runs SPARK_GRAFT_BENCH_REPS times per scale factor (median
+reported) through bench.py's own noop-sink rep loop (``time_reps``).
+Output: one JSON line with per-query medians per sf + the growth
+exponent alpha fitted between the two largest scale factors (time ~
+N^alpha; alpha <= ~1.1 is the linear-ish band, >1.3 flags superlinear
+growth worth explaining).
 
 Usage: python tools/scaling_curve.py [sf_dir ...]
   default: /root/testdata/sf0.01 /root/testdata/sf0.1 <repo>/.scaledata/sf1.0
@@ -19,7 +20,6 @@ import json
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
@@ -27,7 +27,7 @@ if REPO not in sys.path:
 
 os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
 
-from bench import unpersist_all  # noqa: E402
+from bench import bench_reps, time_reps  # noqa: E402
 
 QUERIES = [
     "q1_pricing_summary",
@@ -192,10 +192,10 @@ GRID_QUERIES = [
     "grid_getis_gi",            # 5-offset neighbor join + owner rollup
     "grid_quantile_map",        # two per-cell rank windows + 2 k-joins
 ]
-REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 
 def main() -> None:
+    reps = bench_reps()
     dirs = sys.argv[1:] or [
         "/root/testdata/sf0.01",
         "/root/testdata/sf0.1",
@@ -245,12 +245,7 @@ def main() -> None:
         for name in QUERIES + GRID_QUERIES:
             if only and name not in only:
                 continue
-            samples = []
-            for _ in range(REPS):
-                t0 = time.perf_counter()
-                registry[name](spark, d).write.format("noop").mode("overwrite").save()
-                samples.append(round(time.perf_counter() - t0, 3))
-            unpersist_all(spark)  # as bench.py: free localCheckpoint blocks per query
+            samples, _ = time_reps(spark, registry[name], d, reps)
             out.setdefault(name, {})[sf] = sorted(samples)[len(samples) // 2]
     os.environ.pop("SPARK_GRAFT_GRID_PATH", None)
 
@@ -273,7 +268,7 @@ def main() -> None:
         "grid_sizes": grid_sizes,
         "queries": out,
         "alpha_last_step": alpha,
-        "reps": REPS,
+        "reps": reps,
     }
     # r13 advisor: a subset run's output must be distinguishable from
     # an official full-curve record
